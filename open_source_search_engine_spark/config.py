@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+from .functions.codec import check_docid_codec
 from .functions.posdb import DEFAULT_HASHGROUP_WEIGHTS
 
 
@@ -20,16 +21,9 @@ class EngineConf:
     b: float = 0.75
     # scorer mode: "bm25" | "reference" (SURVEY.md §4.6)
     scorer: str = "bm25"
-    # posting-stream codec: "pfor" (codec v4, default since the
-    # windowed-gather decode landed: FOR-bitpacked docs streams,
-    # 2.5-6% smaller blobs, full decode ~12% FASTER than varint and
-    # header decode ~20% faster) | "varint" (codec v3, the previous
-    # default) | "pfor_all" (codec v5, docs + tf/dl/rank + positions
-    # + ctx all FOR-bitpacked: 21-28% smaller blobs at decode parity
-    # and ~1.5x encode cost — the pick when segment bytes dominate;
-    # see functions/codec.py encode_postings docstring for measured
-    # numbers). Readers handle all versions transparently, including
-    # mixed-version indexes across generations.
+    # posting-blob codec: only "pfor" (codec v4 with the tf->min-dl
+    # frontier, functions/codec.py) exists; any other value raises.
+    # The field remains for callers that still read it.
     docid_codec: str = "pfor"
     # reference-scorer two-pass candidate plan kicks in when the summed
     # query-term df reaches this (below it the extra fixed-cost Spark
@@ -101,14 +95,14 @@ class EngineConf:
     # reference also gates behind conf.
     use_hf_shortcuts: bool = False
 
-    # C2 multi-blob merge strategy (ADVICE r3): None = auto — bulk
-    # (batched one-shared-sort) merge when each node runs <=16
-    # concurrent workers, per-group merge on wider shared-memory-bus
-    # nodes (measured A/B, BENCH.md §2). The auto heuristic reads
-    # local[N] / spark.executor.cores and ASSUMES one executor JVM per
-    # node (the typical sizing); deployments packing several executors
-    # per node should set this explicitly (outputs are byte-identical
-    # either way — this is perf-only).
+    # C2 and compaction multi-blob merge strategy (ADVICE r3): None =
+    # auto — bulk (batched one-shared-sort) merge when each node runs
+    # <=16 concurrent workers, per-group merge on wider
+    # shared-memory-bus nodes (measured A/B for C2, BENCH.md §2). The
+    # auto heuristic reads local[N] / spark.executor.cores and ASSUMES
+    # one executor JVM per node (the typical sizing); deployments
+    # packing several executors per node should set this explicitly
+    # (outputs are byte-identical either way — this is perf-only).
     bulk_merge: bool | None = None
 
     # per-term docid HLL sketches as an index artifact (term_sketches/
@@ -121,6 +115,9 @@ class EngineConf:
     # deletions are not subtracted (HLLs never subtract) until a
     # from-scratch rebuild. None (default) = off.
     term_sketch_p: int | None = None
+
+    def __post_init__(self):
+        check_docid_codec(self.docid_codec)
 
     def bucket_of(self, term_id: int) -> int:
         return term_id % self.n_buckets

@@ -1,5 +1,6 @@
-"""Posting-list blob codec: docID-delta varint + positions + packed
-context, with per-block skip pointers and block-max metadata.
+"""Posting-list blob codec: FOR-packed docID deltas + varint tf/dl/rank
+and positions + packed context, with per-block skip pointers and
+block-max metadata.
 
 The reference compresses posting lists with 3-tier key truncation: 18
 bytes for a new termId, 12 for a new docId under the same termId, 6 for
@@ -7,11 +8,12 @@ another position of the same (termId, docId) (``Posdb.h:44-48, 228-233``;
 merge-time preservation ``RdbList.cpp:2154 posdbMerge_r``), and keeps a
 sparse per-file key->offset map (``RdbMap.cpp``) so scans seek instead of
 reading whole files. Our equivalent (SURVEY.md §1.2, §7) is one blob per
-(term_id [, salt]) laid out in 128-doc blocks:
+(term_id [, salt]) laid out in 128-doc blocks, in exactly one format
+(codec v4 with the frontier flag; any other version byte is rejected):
 
-    header:   version u8 | varint n_docs
-    block meta (10 varint arrays of nblocks entries each; the last 3 are
-    v3 additions — v2 blobs decode fine, their readers see None):
+    header:   version u8 (0x44 = CODEC_VERSION | FRONTIER_FLAG) |
+              varint n_docs
+    block meta (13 varint arrays of nblocks entries each):
       block_base   first docId of each block (absolute)   } RdbMap analog
       bmax_tf      max tf in block                        } block-max
       bmin_dl      min doclen in block                    }   (WAND)
@@ -31,14 +33,14 @@ reading whole files. Our equivalent (SURVEY.md §1.2, §7) is one blob per
                    position slot (Posdb.h:165-176), so these are value
                    ranges: gbmin/gbmax probes skip non-overlapping
                    blocks without stream decode
-      bdl_tf2/4/8  (version flag 0x40, r5) min doclen among block docs
-                   with tf >= 2/4/8 (0 = none) — the tf-band -> min-dl
-                   Pareto frontier the BM25 block bound walks, so
-                   flat-tf termlists still prune on doclen variance
-                   (see bm25_block_ubs)
+      bdl_tf2/4/8  min doclen among block docs with tf >= 2/4/8 (0 =
+                   none) — the tf-band -> min-dl Pareto frontier the
+                   BM25 block bound walks, so flat-tf termlists still
+                   prune on doclen variance (see bm25_block_ubs)
     streams (per block, concatenated in block order):
-      docs:     delta varints, first delta of each block relative to
-                block_base (so any block decodes standalone)
+      docs:     FOR-bitpacked deltas, [width u8][packed bits] per block;
+                the first delta of each block is 0 against block_base
+                (so any block decodes standalone)
       tf/dl/rank: varints, grouped per block (tf*, dl*, rank*)
       pos:      delta varints, reset at each doc start
       ctx:      3 bytes per position (hg 4b | density 5b | diversity 4b |
@@ -47,8 +49,9 @@ reading whole files. Our equivalent (SURVEY.md §1.2, §7) is one blob per
 The block meta decodes in O(nblocks) without touching the streams, so a
 reader can (a) skip straight to blocks intersecting a candidate docId
 set (skip pointers = RdbMap seek) and (b) skip blocks whose BM25 upper
-bound (from bmax_tf/bmin_dl) can't reach the current top-k threshold
-(block-max WAND, PosdbTable.cpp:4494 getMaxPossibleScore analog).
+bound (from bmax_tf/bmin_dl and the frontier) can't reach the current
+top-k threshold (block-max WAND, PosdbTable.cpp:4494
+getMaxPossibleScore analog).
 
 All encode/decode is numpy-vectorized; python loops only over blocks.
 """
@@ -57,23 +60,30 @@ from __future__ import annotations
 
 import numpy as np
 
-CODEC_VERSION = 3
-PFOR_VERSION = 4  # opt-in: docs stream FOR-bitpacked instead of varint
-PFOR_ALL_VERSION = 5  # opt-in: docs + tf/dl/rank + positions FOR-bitpacked
-# version-byte flag (orthogonal to the stream codec): the block meta
-# carries 3 extra arrays — the per-block (tf >= {2,4,8}) -> min-doclen
-# Pareto frontier. The plain (bmax_tf, bmin_dl) bound pairs the max tf
-# with the min dl of DIFFERENT docs, which barely prunes on flat-tf
-# termlists (tf ≈ 1-2 everywhere: measured 541/546 blocks decoded on a
-# 500k mid-df list); the frontier caps each tf band with the min dl a
-# doc of that band actually has, so the block bound tracks real docs
+CODEC_VERSION = 4
+# version-byte flag: the block meta carries 3 extra arrays — the
+# per-block (tf >= {2,4,8}) -> min-doclen Pareto frontier. The plain
+# (bmax_tf, bmin_dl) bound pairs the max tf with the min dl of
+# DIFFERENT docs, which barely prunes on flat-tf termlists (tf ≈ 1-2
+# everywhere: measured 541/546 blocks decoded on a 500k mid-df list);
+# the frontier caps each tf band with the min dl a doc of that band
+# actually has, so the block bound tracks real docs
 # (PosdbTable.cpp:4494 getMaxPossibleScore reads per-doc rank fields
-# for the same reason). Readers treat flag-less blobs as frontier-free.
+# for the same reason). Every blob carries it.
 FRONTIER_FLAG = 0x40
+_VERSION_BYTE = CODEC_VERSION | FRONTIER_FLAG
 _FRONTIER_THRESHOLDS = (2, 4, 8)   # tf bands: [1,1] [2,3] [4,7] [8,inf)
-_MIN_READ_VERSION = 2  # v2 blobs (no bctx/pos-range arrays) still decode
-_MAX_READ_VERSION = PFOR_ALL_VERSION
+_N_META_ARRAYS = 13
 BLOCK = 128  # docs per block
+
+
+def check_docid_codec(docid_codec: str) -> None:
+    """Reject any ``docid_codec`` name but "pfor", the one format (the
+    name survives for callers that still pass it)."""
+    if docid_codec != "pfor":
+        raise ValueError(
+            f"unsupported docid_codec {docid_codec!r}: only 'pfor' "
+            f"(codec v{CODEC_VERSION}) is supported")
 
 
 def _frontier_arrays(tfs: np.ndarray, doclens: np.ndarray,
@@ -107,28 +117,26 @@ def _for_pack(vals: np.ndarray) -> np.ndarray:
 
 
 def _for_unpack(buf: np.ndarray, off: int, count: int) -> np.ndarray:
-    """Inverse of _for_pack at a byte offset; returns uint64 deltas."""
+    """Unpack one block's [width u8][packed bits] span (as written by
+    ``_for_pack`` / ``_for_pack_many``) at a byte offset; returns uint64
+    deltas."""
     width = int(buf[off])
     nbytes = (count * width + 7) // 8
     bits = np.unpackbits(buf[off + 1: off + 1 + nbytes],
                          bitorder="little", count=count * width)
     weights = np.uint64(1) << np.arange(width, dtype=np.uint64)
-    return (bits.reshape(count, width).astype(np.uint64) @ weights)         .astype(np.uint64)
-
-
-def _for_packed_nbytes(width: int, count: int) -> int:
-    return 1 + (count * width + 7) // 8
+    return (bits.reshape(count, width).astype(np.uint64) @ weights) \
+        .astype(np.uint64)
 
 
 def _for_unpack_ragged(buf: np.ndarray, offs: np.ndarray,
                        counts: np.ndarray) -> np.ndarray:
-    """Unpack MANY ``_for_pack`` spans at arbitrary byte offsets in one
-    vectorized bit-gather — the ragged inverse of ``_for_pack_many``.
-    ``offs`` are absolute offsets of each span's width byte; returns
-    the concatenated uint64 values in span order. Unlike the
-    width-grouped rectangular unpack in ``decode_blocks`` this makes
-    no equal-count assumption, so it serves the v5 tf/dl/rank and
-    position spans whose per-block counts vary."""
+    """Unpack MANY [width u8][packed bits] spans at arbitrary byte
+    offsets in one vectorized bit-gather — the ragged inverse of
+    ``_for_pack_many``. ``offs`` are absolute offsets of each span's
+    width byte; returns the concatenated uint64 values in span order.
+    No equal-count assumption, so the short last block of a blob needs
+    no special case."""
     counts = counts.astype(np.int64)
     total = int(counts.sum())
     if total == 0:
@@ -144,10 +152,9 @@ def _for_unpack_ragged(buf: np.ndarray, offs: np.ndarray,
         # fast path: every value's bits fit a word-sized little-endian
         # window starting at its byte ((vstart & 7) + w <= 32/64), so
         # one fancy-gather of 4 or 8 bytes per value + an int view +
-        # shift/mask decodes everything — no per-bit arrays. All
-        # streams qualify (tf/rank <= 10, positions <= 18, ctx <= 23,
-        # dl <= ~20 -> the half-traffic 4-byte window; docid deltas
-        # <= 38 -> the 8-byte one).
+        # shift/mask decodes everything — no per-bit arrays. Docid
+        # deltas are <= 38 bits (the 8-byte window); dense lists fit
+        # the half-traffic 4-byte one.
         win = 4 if w_max <= 25 else 8
         byte0 = vstart >> 3
         end = int(byte0.max()) + win
@@ -174,12 +181,12 @@ def _for_unpack_ragged(buf: np.ndarray, offs: np.ndarray,
     return np.add.reduceat(contrib, vw_start)
 
 
+
 def _bitlen_u64(v: np.ndarray) -> np.ndarray:
     """Exact integer bit length per element (floor(log2)+1, 0 -> 0):
     six vectorized shift passes — float log2 is NOT safe here (it
     rounds to the exact integer at 2^k +/- 1 boundaries for large k,
-    which would disagree with the single-blob encoder's
-    int.bit_length and break byte parity)."""
+    which would pick the wrong pack width and change the blob bytes)."""
     v = v.astype(np.uint64)
     w = np.zeros(len(v), dtype=np.int64)
     x = v.copy()
@@ -192,12 +199,15 @@ def _bitlen_u64(v: np.ndarray) -> np.ndarray:
 
 def _for_pack_many(deltas: np.ndarray, blk_start: np.ndarray,
                    blk_count: np.ndarray):
-    """Vectorized ragged FOR pack of MANY blocks at once — the bulk
-    analog of ``_for_pack``, byte-identical per block. Returns
-    (region uint8 array holding every block's [width][packed] span
-    back to back, per-block byte sizes uint64). One packbits over a
-    global little-bit-order buffer; block regions are byte-aligned by
-    construction so no bits cross block boundaries."""
+    """Vectorized ragged FOR pack of MANY blocks at once: each block
+    becomes [width u8][ceil(n*w/8) bytes, little bit order], width =
+    max bit length of its values (min 1) — plain frame-of-reference
+    packing; the per-block reset against block_base already bounds
+    deltas, so the patched-exception machinery of full PFOR buys
+    nothing at BLOCK=128 (one outlier only inflates its own block).
+    Returns (region uint8 array holding every block's span back to
+    back, per-block byte sizes uint64). Block regions are byte-aligned
+    by construction so no bits cross block boundaries."""
     nd = len(deltas)
     nblk = len(blk_start)
     v64 = deltas.astype(np.uint64)
@@ -248,6 +258,7 @@ def _for_pack_many(deltas: np.ndarray, blk_start: np.ndarray,
     return out, nbytes.astype(np.uint64)
 
 
+
 def pack_block_ctx(ctx_slice: np.ndarray) -> int:
     """Pack a block's ctx-class summary (see module docstring)."""
     if len(ctx_slice) == 0:
@@ -271,10 +282,6 @@ def unpack_block_ctx(bctx: np.ndarray):
             (b >> np.uint64(4)) & np.uint64(0xF),
             b & np.uint64(0xF))
 
-
-def _varint_encode(values: np.ndarray) -> np.ndarray:
-    """Vectorized LEB128 encode of a uint64 array -> uint8 array."""
-    return _varint_encode_len(values)[0]
 
 
 def _varint_encode_len(
@@ -313,17 +320,6 @@ def _varint_encode_len(
     return out, nbytes
 
 
-def _varint_nbytes(values: np.ndarray) -> np.ndarray:
-    """Per-value encoded length (bytes) without encoding."""
-    v = values.astype(np.uint64, copy=True)
-    nbytes = np.ones(len(v), dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nz = tmp > 0
-        nbytes[nz] += 1
-        tmp = tmp >> np.uint64(7)
-    return nbytes
-
 
 def _varint_decode(buf: np.ndarray, count: int, offset: int,
                    end: int | None = None) -> tuple[np.ndarray, int]:
@@ -354,9 +350,6 @@ def _varint_decode(buf: np.ndarray, count: int, offset: int,
     return vals, offset + used
 
 
-def _block_slices(n: int) -> list[tuple[int, int]]:
-    return [(s, min(s + BLOCK, n)) for s in range(0, n, BLOCK)]
-
 
 def encode_postings(
     doc_ids: np.ndarray,
@@ -365,63 +358,28 @@ def encode_postings(
     positions: np.ndarray,
     ctxs: np.ndarray,
     ranks: np.ndarray,
-    docid_codec: str = "varint",
-    frontier: bool = True,
+    docid_codec: str = "pfor",
 ) -> bytes:
     """Encode one term's postings (inputs as in the module docstring;
-    doc_ids ascending, positions ascending within each doc).
+    doc_ids ascending, positions ascending within each doc) into one
+    v4 blob. The docs stream is FOR-bitpacked per block; tf/dl/rank and
+    position deltas are varints. ``docid_codec`` accepts only "pfor".
 
-    frontier=False emits a legacy flag-less blob (no per-block tf->dl
-    Pareto arrays) — read-compat tests only; new builds always carry
-    the frontier.
-
-    docid_codec="pfor" writes a version-4 blob whose DOCS stream is
-    FOR-bitpacked per block (the north-star's "varint/PFOR" option);
-    meta layout and every other stream are identical to v3 and the
-    decoders handle both transparently. Measured blob sizes: v4 is
-    2.5-6% smaller across shapes (docid-dominated sparse: 0.94×;
-    position-heavy: 0.97×), and with the windowed ragged batch unpack
-    in decode_blocks the whole-blob decode beats varint (154.7 vs
-    178.2 ms full on a 500k-doc tf≈1.5 termlist).
-
-    docid_codec="pfor_all" writes a version-5 blob that ALSO
-    FOR-bitpacks the tf/dl/rank spans (three packs per block,
-    [w][tf*][w][dl*][w][rk*], each sub-stream with its own width —
-    tf needs 1-2 bits, dl 10-12, rank 4, so one shared width would
-    waste most of the saving), the position-delta span, and the ctx
-    span (one pack each per block; blocks with no positions
-    contribute NO bytes to either). v5 meta carries an 11th
-    per-block array: the packed ctx span's byte size (pre-v5 ctx is
-    fixed 3 bytes/posting and needs none). Measured on a 500k-doc
-    tf≈1.5 termlist with realistic ctx values: v5 is 27.5% smaller
-    than varint (4.74 vs 6.54 MB) at full-decode parity (170 vs
-    175 ms) and ~1.5x bulk-encode cost. Function-level defaults stay
-    varint so explicit callers are byte-stable; EngineConf defaults
-    to "pfor" (strictly smaller AND faster), with "pfor_all" the
-    pick where segment bytes dominate (they do at 100 TB: the blobs
-    ARE the index)."""
-    use_pfor_all = docid_codec == "pfor_all"
-    use_pfor = docid_codec == "pfor" or use_pfor_all
+    Written independently of ``encode_postings_many`` (one blob, one
+    ``_for_pack`` per block) so the two check each other's bytes."""
+    check_docid_codec(docid_codec)
     nd = len(doc_ids)
     doc_ids = doc_ids.astype(np.uint64)
     tfs = tfs.astype(np.uint64)
     doclens = doclens.astype(np.uint64)
     ranks = ranks.astype(np.uint64)
-    version = (PFOR_ALL_VERSION if use_pfor_all
-               else PFOR_VERSION if use_pfor else CODEC_VERSION)
-    if frontier:
-        version |= FRONTIER_FLAG
-    parts = [np.frombuffer(bytes([version]), dtype=np.uint8),
-             _varint_encode(np.array([nd], dtype=np.uint64))]
+    parts = [np.frombuffer(bytes([_VERSION_BYTE]), dtype=np.uint8),
+             _varint_encode_len(np.array([nd], dtype=np.uint64))[0]]
     if nd == 0:
         return b"".join(p.tobytes() for p in parts)
 
-    # Fully vectorized across blocks, and ONE varint encode per region
-    # (meta span, stream span) instead of one per array/block — the
-    # per-call numpy fixed cost dominated the build's merge loop on
-    # tiny blobs and the per-block python loop dominated big ones.
-    # Byte output is identical to the per-array formulation (varints
-    # are self-delimiting; concatenation order IS the format).
+    # vectorized across blocks: one varint encode for the meta and one
+    # for the tf/dl/rank + position streams
     nb = (nd + BLOCK - 1) // BLOCK
     bstarts = np.arange(0, nd, BLOCK, dtype=np.int64)
     counts = np.minimum(BLOCK, nd - bstarts)
@@ -432,24 +390,20 @@ def encode_postings(
     deltas[0] = 0
     deltas[1:] = doc_ids[1:] - doc_ids[:-1]
     deltas[bstarts] = 0  # block_base carries the absolute value
-    block_base = doc_ids[bstarts]
+    doc_parts = [_for_pack(deltas[s:e]) for s, e in zip(bstarts, bends)]
 
     # position deltas, reset at each doc start
     pos = positions.astype(np.uint64)
     pos_cum = np.zeros(nd + 1, dtype=np.int64)
     pos_cum[1:] = np.cumsum(tfs).astype(np.int64)
     npos_total = int(pos_cum[-1])
+    pdelta = np.empty(npos_total, dtype=np.uint64)
     if npos_total:
-        pdelta = np.empty(npos_total, dtype=np.uint64)
         pdelta[0] = pos[0]
         pdelta[1:] = pos[1:] - pos[:-1]
-        doc_starts = pos_cum[:nd]
-        pdelta[doc_starts] = pos[doc_starts]
-    else:
-        pdelta = np.empty(0, dtype=np.uint64)
+        pdelta[pos_cum[:nd]] = pos[pos_cum[:nd]]
 
-    # stream values in final layout: docs | per-block (tf*, dl*, rank*)
-    # | pos — built once so byte lengths come from one _varint_nbytes
+    # varint streams in final layout: per-block (tf*, dl*, rank*) | pos
     cc = np.zeros(nb + 1, dtype=np.int64)
     np.cumsum(counts, out=cc[1:])
     within = np.arange(nd, dtype=np.int64) - np.repeat(cc[:-1], counts)
@@ -459,116 +413,52 @@ def encode_postings(
     tfdl_vals[base3 + within] = tfs
     tfdl_vals[base3 + c_rep + within] = doclens
     tfdl_vals[base3 + 2 * c_rep + within] = ranks
-    if use_pfor_all:
-        doc_parts = [_for_pack(deltas[s:e])
-                     for s, e in zip(bstarts, bends)]
-        tfdl_parts = [np.concatenate([
-            _for_pack(tfs[s:e]), _for_pack(doclens[s:e]),
-            _for_pack(ranks[s:e])]) for s, e in zip(bstarts, bends)]
-        pos_parts, ctx_parts = [], []
-        pos_bytes_v5 = np.zeros(nb, dtype=np.uint64)
-        ctx_bytes_v5 = np.zeros(nb, dtype=np.uint64)
-        ctx64 = ctxs.astype(np.uint64)
-        for bi, (s, e) in enumerate(zip(bstarts, bends)):
-            ps, pe = int(pos_cum[s]), int(pos_cum[e])
-            if pe > ps:  # empty-position blocks contribute NO bytes
-                p = _for_pack(pdelta[ps:pe])
-                pos_parts.append(p)
-                pos_bytes_v5[bi] = len(p)
-                c5 = _for_pack(ctx64[ps:pe])
-                ctx_parts.append(c5)
-                ctx_bytes_v5[bi] = len(c5)
-        stream_vals = pdelta[:0]  # nothing varint-coded but the meta
-        s_len = None
-        doc_bytes = np.array([len(p) for p in doc_parts],
-                             dtype=np.uint64)
-        tfdl_bytes = np.array([len(p) for p in tfdl_parts],
-                              dtype=np.uint64)
-    elif use_pfor:
-        doc_parts = [_for_pack(deltas[s:e])
-                     for s, e in zip(bstarts, bends)]
-        stream_vals = np.concatenate([tfdl_vals, pdelta])
-        s_len = _varint_nbytes(stream_vals)
-        doc_bytes = np.array([len(p) for p in doc_parts],
-                             dtype=np.uint64)
-        tfdl_bytes = np.add.reduceat(s_len[:3 * nd],
-                                     3 * cc[:-1]).astype(np.uint64)
-        s_len = np.concatenate(  # keep the pos-length slice aligned
-            [np.zeros(nd, dtype=s_len.dtype), s_len])
-    else:
-        doc_parts = None
-        stream_vals = np.concatenate([deltas, tfdl_vals, pdelta])
-        s_len = _varint_nbytes(stream_vals)
-        doc_bytes = np.add.reduceat(s_len[:nd], bstarts).astype(np.uint64)
-        tfdl_bytes = np.add.reduceat(s_len[nd:4 * nd],
-                                     3 * cc[:-1]).astype(np.uint64)
+    stream, s_len = _varint_encode_len(
+        np.concatenate([tfdl_vals, pdelta]))
+    tfdl_bytes = np.add.reduceat(s_len[:3 * nd], 3 * cc[:-1])
 
     # per-block stats (reduceat over block starts)
-    bmax_tf = np.maximum.reduceat(tfs, bstarts)
-    bmin_dl = np.minimum.reduceat(doclens, bstarts)
     npos_blk = (pos_cum[bends] - pos_cum[bstarts]).astype(np.uint64)
+    pos_bytes = np.zeros(nb, dtype=np.uint64)
     bctx = np.zeros(nb, dtype=np.uint64)
     bmin_pos = np.zeros(nb, dtype=np.uint64)
     bmax_pos = np.zeros(nb, dtype=np.uint64)
-    pos_bytes = np.zeros(nb, dtype=np.uint64)
     if npos_total:
         # guard reduceat against empty blocks (npos == 0): clip the
         # start index and zero-mask the result afterwards
         pstarts = np.minimum(pos_cum[bstarts], npos_total - 1)
         nonempty = npos_blk > 0
-        if use_pfor_all:
-            pos_bytes = pos_bytes_v5
-        else:
-            p_len = s_len[4 * nd:]
-            pos_bytes = np.where(
-                nonempty, np.add.reduceat(p_len, pstarts),
-                0).astype(np.uint64)
-        c32 = ctxs.astype(np.uint32)
-        hg_bit = (np.uint32(1) << ((c32 >> 15) & 0xF)).astype(np.uint32)
-        mask = np.bitwise_or.reduceat(hg_bit, pstarts).astype(np.uint64)
-        den = np.maximum.reduceat(
-            ((c32 >> 10) & 0x1F).astype(np.uint64), pstarts)
-        div = np.maximum.reduceat(
-            ((c32 >> 6) & 0xF).astype(np.uint64), pstarts)
-        spam = np.maximum.reduceat(
-            ((c32 >> 2) & 0xF).astype(np.uint64), pstarts)
-        bctx = np.where(
-            nonempty,
-            (mask & np.uint64(0xFFFF)) << np.uint64(13)
-            | den << np.uint64(8) | div << np.uint64(4) | spam,
-            0).astype(np.uint64)
-        bmin_pos = np.where(nonempty,
-                            np.minimum.reduceat(pos, pstarts),
-                            0).astype(np.uint64)
-        bmax_pos = np.where(nonempty,
-                            np.maximum.reduceat(pos, pstarts),
+
+        def per_block(ufunc, vals):
+            return np.where(nonempty, ufunc.reduceat(vals, pstarts),
                             0).astype(np.uint64)
 
-    meta_arrays = [
-        block_base.astype(np.uint64), bmax_tf.astype(np.uint64),
-        bmin_dl.astype(np.uint64), doc_bytes, tfdl_bytes, pos_bytes,
-        npos_blk, bctx, bmin_pos, bmax_pos]
-    if use_pfor_all:
-        meta_arrays.append(ctx_bytes_v5)  # 11th array: FOR-packed ctx
-    if frontier:
-        meta_arrays.extend(_frontier_arrays(tfs, doclens, bstarts))
-    meta_vals = np.concatenate(meta_arrays)
-    parts.append(_varint_encode(meta_vals))
-    if use_pfor:
-        parts.extend(doc_parts)
-    if use_pfor_all:
-        parts.extend(tfdl_parts)
-        parts.extend(pos_parts)
-        parts.extend(ctx_parts)
-    else:
-        parts.append(_varint_encode(stream_vals))
-    if npos_total and not use_pfor_all:
-        c = ctxs.astype(np.uint32)
-        cb = np.empty((len(c), 3), dtype=np.uint8)
-        cb[:, 0] = c & 0xFF
-        cb[:, 1] = (c >> 8) & 0xFF
-        cb[:, 2] = (c >> 16) & 0xFF
-        parts.append(cb.ravel())
+        c32 = ctxs.astype(np.uint32)
+        pos_bytes = per_block(np.add, s_len[3 * nd:])
+        mask = per_block(np.bitwise_or,
+                         (np.uint32(1) << ((c32 >> 15) & 0xF)))
+        bctx = ((mask & np.uint64(0xFFFF)) << np.uint64(13)
+                | per_block(np.maximum, (c32 >> 10) & 0x1F) << np.uint64(8)
+                | per_block(np.maximum, (c32 >> 6) & 0xF) << np.uint64(4)
+                | per_block(np.maximum, (c32 >> 2) & 0xF))
+        bmin_pos = per_block(np.minimum, pos)
+        bmax_pos = per_block(np.maximum, pos)
+
+    meta_vals = np.concatenate([
+        doc_ids[bstarts], np.maximum.reduceat(tfs, bstarts),
+        np.minimum.reduceat(doclens, bstarts),
+        np.array([len(p) for p in doc_parts], dtype=np.uint64),
+        tfdl_bytes.astype(np.uint64), pos_bytes, npos_blk, bctx,
+        bmin_pos, bmax_pos, *_frontier_arrays(tfs, doclens, bstarts)])
+    parts.append(_varint_encode_len(meta_vals)[0])
+    parts.extend(doc_parts)
+    parts.append(stream)
+    c = ctxs.astype(np.uint32)
+    cb = np.empty((len(c), 3), dtype=np.uint8)
+    cb[:, 0] = c & 0xFF
+    cb[:, 1] = (c >> 8) & 0xFF
+    cb[:, 2] = (c >> 16) & 0xFF
+    parts.append(cb.ravel())
     return b"".join(p.tobytes() for p in parts)
 
 
@@ -580,11 +470,8 @@ def encode_postings_many(
     ranks: np.ndarray,
     positions: np.ndarray,
     ctxs: np.ndarray,
-    docid_codec: str = "varint",
-    frontier: bool = True,
 ) -> list[bytes]:
-    """Bulk encoder for MANY runs of ANY length at once, byte-identical
-    to calling ``encode_postings`` per run but fully vectorized across
+    """Encode MANY runs of ANY length at once, fully vectorized across
     runs AND blocks — the per-run fixed cost of ~30 numpy calls
     (~0.5ms) made per-run encoding the build's hottest path (one web
     page contributes dozens of df=1 fielded terms, and every salted
@@ -595,13 +482,10 @@ def encode_postings_many(
     doc level, ``positions/ctxs`` at posting level (aligned with tfs).
     Every ``run_nd[i]`` must be >= 1 (callers encode empty lists via
     ``encode_postings`` directly). Returns one bytes blob per run, in
-    run order. docid_codec="pfor" emits version-4 blobs whose docs
-    streams are FOR-bitpacked (``_for_pack_many``: one vectorized
-    ragged pack for every block of every run — byte-identical to the
-    per-blob encoder's v4 output).
+    run order; each blob is independent of the others in the batch.
+    The docs streams of every block of every run pack in ONE vectorized
+    ragged FOR pack (``_for_pack_many``).
     """
-    use_pfor_all = docid_codec == "pfor_all"
-    use_pfor = docid_codec == "pfor" or use_pfor_all
     nrun = len(run_nd)
     if nrun == 0:
         return []
@@ -655,84 +539,35 @@ def encode_postings_many(
     tfdl_vals[base3 + c_rep + within] = doclens
     tfdl_vals[base3 + 2 * c_rep + within] = ranks
 
-    # ONE varint encode per stream for the whole batch
-    if use_pfor:
-        enc_d, doc_bytes_pf = _for_pack_many(deltas, blk_start,
-                                             blk_count)
-        len_d = None
-    else:
-        enc_d, len_d = _varint_encode_len(deltas)
-    if use_pfor_all:
-        # v5 tf/dl/rank: one ragged FOR pack per sub-stream (tf/dl/rank
-        # are block-contiguous in doc order already), then interleave
-        # the three packs per block ([tf][dl][rk]) with a vectorized
-        # scatter copy — byte-identical per block to encode_postings
-        rt, st = _for_pack_many(tfs, blk_start, blk_count)
-        rd2, sd = _for_pack_many(doclens, blk_start, blk_count)
-        rr, sr = _for_pack_many(ranks, blk_start, blk_count)
-        st, sd, sr = (s.astype(np.int64) for s in (st, sd, sr))
-        sizes3 = st + sd + sr
-        dst3 = np.cumsum(sizes3) - sizes3
-        enc_t = np.empty(int(sizes3.sum()), dtype=np.uint8)
-
-        def _scatter(region, s, blk_off):
-            src_start = np.cumsum(s) - s
-            tot = int(s.sum())
-            intra = (np.arange(tot, dtype=np.int64)
-                     - np.repeat(src_start, s))
-            enc_t[np.repeat(dst3 + blk_off, s) + intra] = region
-
-        _scatter(rt, st, 0)
-        _scatter(rd2, sd, st)
-        _scatter(rr, sr, st + sd)
-        tfdl_bytes_blk_v5 = sizes3.astype(np.uint64)
-        len_t = len_p = None
-        enc_p = np.empty(0, dtype=np.uint8)  # packed once npos known
-    else:
-        enc_t, len_t = _varint_encode_len(tfdl_vals)
-        enc_p, len_p = _varint_encode_len(pdelta)
+    # ONE pack/encode per stream for the whole batch
+    enc_d, doc_bytes_blk = _for_pack_many(deltas, blk_start, blk_count)
+    enc_t, len_t = _varint_encode_len(tfdl_vals)
+    enc_p, len_p = _varint_encode_len(pdelta)
     c = ctxs.astype(np.uint32)
-    if use_pfor_all:
-        enc_c = np.empty(0, dtype=np.uint8)  # packed once npos known
-    else:
-        cb = np.empty((len(c), 3), dtype=np.uint8)
-        cb[:, 0] = c & 0xFF
-        cb[:, 1] = (c >> 8) & 0xFF
-        cb[:, 2] = (c >> 16) & 0xFF
-        enc_c = cb.ravel()
+    cb = np.empty((len(c), 3), dtype=np.uint8)
+    cb[:, 0] = c & 0xFF
+    cb[:, 1] = (c >> 8) & 0xFF
+    cb[:, 2] = (c >> 16) & 0xFF
+    enc_c = cb.ravel()
 
     # per-block stats + byte spans
     bmax_tf = np.maximum.reduceat(tfs, blk_start)
     bmin_dl = np.minimum.reduceat(doclens, blk_start)
-    doc_bytes_blk = (doc_bytes_pf if use_pfor else
-                     np.add.reduceat(len_d, blk_start).astype(np.uint64))
-    tfdl_bytes_blk = (tfdl_bytes_blk_v5 if use_pfor_all else
-                      np.add.reduceat(len_t, 3 * cc[:-1]).astype(np.uint64))
+    tfdl_bytes_blk = np.add.reduceat(len_t, 3 * cc[:-1]).astype(np.uint64)
     blk_pos_start = pc[blk_start]
     npos_blk = (pc[blk_end] - blk_pos_start).astype(np.uint64)
     bctx = np.zeros(nblk, dtype=np.uint64)
     bmin_pos = np.zeros(nblk, dtype=np.uint64)
     bmax_pos = np.zeros(nblk, dtype=np.uint64)
     pos_bytes_blk = np.zeros(nblk, dtype=np.uint64)
-    ctx_bytes_blk = np.zeros(nblk, dtype=np.uint64)
     if npos_total:
+        # guard reduceat against empty blocks (npos == 0): clip the
+        # start index and zero-mask the result afterwards
         pstarts = np.minimum(blk_pos_start, npos_total - 1)
         nonempty = npos_blk > 0
-        if use_pfor_all:
-            # v5 positions + ctx: ragged FOR packs of the nonempty pos
-            # blocks (empty blocks contribute NO bytes, like
-            # encode_postings)
-            ne_starts = blk_pos_start[nonempty].astype(np.int64)
-            ne_counts = npos_blk[nonempty].astype(np.int64)
-            enc_p, sp = _for_pack_many(pdelta, ne_starts, ne_counts)
-            pos_bytes_blk[nonempty] = sp
-            enc_c, sc = _for_pack_many(ctxs.astype(np.uint64),
-                                       ne_starts, ne_counts)
-            ctx_bytes_blk[nonempty] = sc
-        else:
-            pos_bytes_blk = np.where(
-                nonempty, np.add.reduceat(len_p, pstarts),
-                0).astype(np.uint64)
+        pos_bytes_blk = np.where(
+            nonempty, np.add.reduceat(len_p, pstarts),
+            0).astype(np.uint64)
         hg_bit = (np.uint32(1) << ((c >> 15) & 0xF)).astype(np.uint32)
         mask = np.bitwise_or.reduceat(hg_bit, pstarts).astype(np.uint64)
         den = np.maximum.reduceat(
@@ -753,20 +588,17 @@ def encode_postings_many(
                             np.maximum.reduceat(pos, pstarts),
                             0).astype(np.uint64)
 
-    # meta values per run, array-major within the run (same layout as
-    # encode_postings): varint(nd) | base*nb | bmax_tf*nb | ... — built
-    # as ONE scatter-filled array so a single varint encode covers all
-    # runs' headers
+    # meta values per run, array-major within the run: varint(nd) |
+    # base*nb | bmax_tf*nb | ... — built as ONE scatter-filled array so
+    # a single varint encode covers all runs' headers
     meta_arrays = (
         block_base, bmax_tf.astype(np.uint64),
         bmin_dl.astype(np.uint64), doc_bytes_blk, tfdl_bytes_blk,
-        pos_bytes_blk, npos_blk, bctx, bmin_pos, bmax_pos) \
-        + ((ctx_bytes_blk,) if use_pfor_all else ()) \
-        + (tuple(_frontier_arrays(tfs, doclens, blk_start))
-           if frontier else ())
-    n_meta = len(meta_arrays)
-    meta_vals = np.empty(nrun + n_meta * nblk, dtype=np.uint64)
-    run_base = blk_before * n_meta + np.arange(nrun, dtype=np.int64)
+        pos_bytes_blk, npos_blk, bctx, bmin_pos, bmax_pos,
+        *_frontier_arrays(tfs, doclens, blk_start))
+    meta_vals = np.empty(nrun + _N_META_ARRAYS * nblk, dtype=np.uint64)
+    run_base = blk_before * _N_META_ARRAYS + np.arange(nrun,
+                                                       dtype=np.int64)
     meta_vals[run_base] = run_nd.astype(np.uint64)
     blk_base_ix = run_base[blk_run] + 1 + blk_within
     run_nb_blk = run_nb[blk_run]
@@ -777,16 +609,10 @@ def encode_postings_many(
 
     # per-run byte spans (streams are run-contiguous)
     doc_bytes_run = (np.add.reduceat(doc_bytes_blk, blk_before)
-                     .astype(np.int64) if use_pfor else
-                     np.add.reduceat(len_d, doc_starts))
-    tfdl_bytes_run = (np.add.reduceat(tfdl_bytes_blk, blk_before)
-                      .astype(np.int64) if use_pfor_all else
-                      np.add.reduceat(len_t, 3 * cc[blk_before]))
+                     .astype(np.int64))
+    tfdl_bytes_run = np.add.reduceat(len_t, 3 * cc[blk_before])
     run_npos = (pc[doc_ends] - pc[doc_starts]).astype(np.int64)
-    if use_pfor_all:
-        pos_bytes_run = (np.add.reduceat(pos_bytes_blk, blk_before)
-                         .astype(np.int64))
-    elif npos_total:
+    if npos_total:
         rp = np.minimum(pc[doc_starts], npos_total - 1)
         pos_bytes_run = np.where(run_npos > 0,
                                  np.add.reduceat(len_p, rp), 0)
@@ -802,14 +628,9 @@ def encode_postings_many(
     do = offsets(doc_bytes_run)
     to = offsets(tfdl_bytes_run)
     po = offsets(pos_bytes_run)
-    co = offsets(np.add.reduceat(ctx_bytes_blk, blk_before)
-                 .astype(np.int64) if use_pfor_all else run_npos * 3)
+    co = offsets(run_npos * 3)
 
-    ver_num = (PFOR_ALL_VERSION if use_pfor_all
-               else PFOR_VERSION if use_pfor else CODEC_VERSION)
-    if frontier:
-        ver_num |= FRONTIER_FLAG
-    ver = bytes([ver_num])
+    ver = bytes([_VERSION_BYTE])
     bm = memoryview(enc_m.tobytes())
     bd = memoryview(enc_d.tobytes())
     bt = memoryview(enc_t.tobytes())
@@ -833,70 +654,64 @@ class BlockMeta:
 
     __slots__ = ("n_docs", "nblocks", "block_base", "bmax_tf", "bmin_dl",
                  "doc_bytes", "tfdl_bytes", "pos_bytes", "npos",
-                 "bctx", "bmin_pos", "bmax_pos", "ctx_bytes", "version",
-                 "frontier", "bdl_tf2", "bdl_tf4", "bdl_tf8",
+                 "bctx", "bmin_pos", "bmax_pos",
+                 "bdl_tf2", "bdl_tf4", "bdl_tf8",
                  "streams_off", "buf")
 
     def __init__(self, blob: bytes):
         buf = np.frombuffer(blob, dtype=np.uint8)
         raw = int(buf[0])
-        self.frontier = bool(raw & FRONTIER_FLAG)
-        v = raw & ~FRONTIER_FLAG
-        if not (_MIN_READ_VERSION <= v <= _MAX_READ_VERSION):
-            raise ValueError(f"bad codec version {raw}")
-        self.version = v
-        off = 1
-        nd_arr, off = _varint_decode(buf, 1, off)
+        if raw != _VERSION_BYTE:
+            raise ValueError(
+                f"unsupported codec version byte 0x{raw:02x}: only codec "
+                f"v{CODEC_VERSION} with the frontier flag "
+                f"(0x{_VERSION_BYTE:02x}) is supported")
+        nd_arr, off = _varint_decode(buf, 1, 1)
         self.n_docs = int(nd_arr[0])
         self.buf = buf
-        if self.n_docs == 0:
-            self.nblocks = 0
-            z = np.empty(0, dtype=np.uint64)
-            self.block_base = self.bmax_tf = self.bmin_dl = z
-            self.doc_bytes = self.tfdl_bytes = self.pos_bytes = self.npos = z
-            self.bctx = self.bmin_pos = self.bmax_pos = z
-            self.ctx_bytes = z
-            self.bdl_tf2 = self.bdl_tf4 = self.bdl_tf8 = z
-            self.streams_off = off
-            return
         nb = (self.n_docs + BLOCK - 1) // BLOCK
         self.nblocks = nb
         # all meta arrays sit back-to-back, so ONE varint decode of the
-        # whole span (then split) replaces 7/10 separate calls — each
+        # whole span (then split) replaces 13 separate calls — each
         # call re-scans continuation bits and pays numpy fixed costs,
         # which dominated the build's multi-blob merge loop (2.5M tiny
         # BlockMeta constructions at 200k docs)
-        n_arrays = (11 if self.version >= PFOR_ALL_VERSION
-                    else 10 if self.version >= 3 else 7)
-        base_arrays = n_arrays
-        if self.frontier:
-            n_arrays += 3
-        flat, off = _varint_decode(buf, n_arrays * nb, off)
+        flat, off = _varint_decode(buf, _N_META_ARRAYS * nb, off)
         (self.block_base, self.bmax_tf, self.bmin_dl, self.doc_bytes,
-         self.tfdl_bytes, self.pos_bytes, self.npos) = (
-            flat[i * nb:(i + 1) * nb] for i in range(7))
-        if self.version >= 3:
-            self.bctx = flat[7 * nb:8 * nb]
-            self.bmin_pos = flat[8 * nb:9 * nb]
-            self.bmax_pos = flat[9 * nb:10 * nb]
-        else:  # v2: readers treat the bounds as unavailable
-            self.bctx = self.bmin_pos = self.bmax_pos = None
-        # v5: per-block byte size of the FOR-packed ctx span (pre-v5
-        # ctx is fixed 3 bytes/posting, derivable from npos)
-        self.ctx_bytes = (flat[10 * nb:11 * nb]
-                          if self.version >= PFOR_ALL_VERSION else None)
-        if self.frontier:
-            fb = base_arrays * nb
-            self.bdl_tf2 = flat[fb:fb + nb]
-            self.bdl_tf4 = flat[fb + nb:fb + 2 * nb]
-            self.bdl_tf8 = flat[fb + 2 * nb:fb + 3 * nb]
-        else:
-            self.bdl_tf2 = self.bdl_tf4 = self.bdl_tf8 = None
+         self.tfdl_bytes, self.pos_bytes, self.npos, self.bctx,
+         self.bmin_pos, self.bmax_pos, self.bdl_tf2, self.bdl_tf4,
+         self.bdl_tf8) = (flat[i * nb:(i + 1) * nb]
+                          for i in range(_N_META_ARRAYS))
         self.streams_off = off
 
     def block_doc_count(self, bi: int) -> int:
         s = bi * BLOCK
         return min(BLOCK, self.n_docs - s)
+
+
+def _offsets(sizes: np.ndarray) -> np.ndarray:
+    """Exclusive prefix sum with the total appended (len(sizes) + 1)."""
+    out = np.zeros(len(sizes) + 1, dtype=np.int64)
+    out[1:] = np.cumsum(sizes).astype(np.int64)
+    return out
+
+
+def _abs_positions(pdelta: np.ndarray, tf: np.ndarray) -> np.ndarray:
+    """Absolute positions from position deltas that reset at each doc
+    start (one doc per ``tf`` entry)."""
+    nd = len(tf)
+    starts = np.zeros(nd, dtype=np.int64)
+    starts[1:] = np.cumsum(tf[:-1]).astype(np.int64)
+    csum = np.cumsum(pdelta, dtype=np.uint64)
+    first = starts[np.repeat(np.arange(nd), tf.astype(np.int64))]
+    return csum - (csum[first] - pdelta[first])
+
+
+def _unpack_ctx(buf: np.ndarray, off: int, npos: int) -> np.ndarray:
+    """``npos`` 3-byte little-endian ctx values at ``off``."""
+    cb = buf[off: off + 3 * npos].reshape(npos, 3).astype(np.uint32)
+    return (cb[:, 0] | (cb[:, 1] << 8) | (cb[:, 2] << 16)) \
+        .astype(np.uint64)
 
 
 def decode_blocks(blob: bytes, block_idx=None, with_positions: bool = False,
@@ -917,21 +732,10 @@ def decode_blocks(blob: bytes, block_idx=None, with_positions: bool = False,
                 "positions": z, "ctxs": z,
                 "block_max_tf": m.bmax_tf, "block_min_dl": m.bmin_dl,
                 "blocks_decoded": 0}
-    sel = (list(range(m.nblocks)) if block_idx is None
-           else sorted(int(b) for b in block_idx))
-    doc_off = np.zeros(m.nblocks + 1, dtype=np.int64)
-    doc_off[1:] = np.cumsum(m.doc_bytes).astype(np.int64)
-    tfdl_off = np.zeros(m.nblocks + 1, dtype=np.int64)
-    tfdl_off[1:] = np.cumsum(m.tfdl_bytes).astype(np.int64)
-    pos_off = np.zeros(m.nblocks + 1, dtype=np.int64)
-    pos_off[1:] = np.cumsum(m.pos_bytes).astype(np.int64)
-    npos_off = np.zeros(m.nblocks + 1, dtype=np.int64)
-    npos_off[1:] = np.cumsum(m.npos).astype(np.int64)
-    if m.version >= PFOR_ALL_VERSION:
-        ctx_off = np.zeros(m.nblocks + 1, dtype=np.int64)
-        ctx_off[1:] = np.cumsum(m.ctx_bytes).astype(np.int64)
-    else:
-        ctx_off = None
+    doc_off = _offsets(m.doc_bytes)
+    tfdl_off = _offsets(m.tfdl_bytes)
+    pos_off = _offsets(m.pos_bytes)
+    npos_off = _offsets(m.npos)
 
     docs_base = m.streams_off
     tfdl_base = docs_base + int(doc_off[-1])
@@ -939,54 +743,36 @@ def decode_blocks(blob: bytes, block_idx=None, with_positions: bool = False,
     ctx_base = pos_base + int(pos_off[-1])
 
     if block_idx is None:
-        # whole-blob fast path: ONE varint decode per stream region,
-        # block/doc structure reconstructed with vectorized index math
-        # (the per-block loop cost ~0.5ms/block in numpy call overhead)
+        # whole-blob fast path: ONE decode per stream region, block/doc
+        # structure reconstructed with vectorized index math (the
+        # per-block loop cost ~0.5ms/block in numpy call overhead)
         nd = m.n_docs
         counts = np.minimum(
             BLOCK, nd - BLOCK * np.arange(m.nblocks, dtype=np.int64))
-        cc = np.zeros(m.nblocks + 1, dtype=np.int64)
-        np.cumsum(counts, out=cc[1:])
-        if m.version >= PFOR_VERSION:
-            # windowed ragged batch unpack: every delta's bits fit an
-            # 8-byte window (widths <= 38), so one fancy-gather +
-            # shift/mask decodes all blocks at once — measured ~4x
-            # faster than the width-grouped unpackbits/matmul it
-            # replaces (22 vs ~90 ms on a 500k-doc termlist)
-            d_all = _for_unpack_ragged(
-                buf, (docs_base + doc_off[:-1]).astype(np.int64), counts)
-        else:
-            d_all, _ = _varint_decode(buf, nd, docs_base,
-                                      tfdl_base)
+        cc = _offsets(counts)
+        # windowed ragged batch unpack: every delta's bits fit an
+        # 8-byte window (widths <= 38), so one fancy-gather +
+        # shift/mask decodes all blocks at once — measured ~4x faster
+        # than a width-grouped unpackbits/matmul (22 vs ~90 ms on a
+        # 500k-doc termlist)
+        d_all = _for_unpack_ragged(
+            buf, (docs_base + doc_off[:-1]).astype(np.int64), counts)
         cum = np.cumsum(d_all, dtype=np.uint64)
         # delta at each block start is 0; docs = block_base + in-block
         # cumsum = global cumsum + (block_base - cumsum at block start)
         adj = np.repeat(m.block_base.astype(np.uint64) - cum[cc[:-1]],
                         counts)
         docs = cum + adj
-        if m.version >= PFOR_ALL_VERSION:
-            # v5: three FOR spans per block ([w][tf*][w][dl*][w][rk*]);
-            # each ragged unpack returns values already in global doc
-            # order (blocks are doc-contiguous), no interleave math
-            tf_off = (tfdl_base + tfdl_off[:-1]).astype(np.int64)
-            w_tf = buf[tf_off].astype(np.int64)
-            tf = _for_unpack_ragged(buf, tf_off, counts)
-            dl_off = tf_off + 1 + (counts * w_tf + 7) // 8
-            w_dl = buf[dl_off].astype(np.int64)
-            dl = _for_unpack_ragged(buf, dl_off, counts)
-            rk_off = dl_off + 1 + (counts * w_dl + 7) // 8
-            rk = _for_unpack_ragged(buf, rk_off, counts)
-        else:
-            tdr, _ = _varint_decode(buf, 3 * nd, tfdl_base, pos_base)
-            within = (np.arange(nd, dtype=np.int64)
-                      - np.repeat(cc[:-1], counts))
-            base3 = np.repeat(3 * cc[:-1], counts)
-            c_rep = np.repeat(counts, counts)
-            tf = tdr[base3 + within]
-            dl = tdr[base3 + c_rep + within]
-            rk = tdr[base3 + 2 * c_rep + within]
+        tdr, _ = _varint_decode(buf, 3 * nd, tfdl_base, pos_base)
+        within = (np.arange(nd, dtype=np.int64)
+                  - np.repeat(cc[:-1], counts))
+        base3 = np.repeat(3 * cc[:-1], counts)
+        c_rep = np.repeat(counts, counts)
+        tf = tdr[base3 + within]
         out = {
-            "doc_ids": docs, "tfs": tf, "doclens": dl, "ranks": rk,
+            "doc_ids": docs, "tfs": tf,
+            "doclens": tdr[base3 + c_rep + within],
+            "ranks": tdr[base3 + 2 * c_rep + within],
             "positions": np.empty(0, dtype=np.uint64),
             "ctxs": np.empty(0, dtype=np.uint64),
             "block_max_tf": m.bmax_tf, "block_min_dl": m.bmin_dl,
@@ -997,93 +783,39 @@ def decode_blocks(blob: bytes, block_idx=None, with_positions: bool = False,
             if ctx_only:
                 out["positions"] = np.zeros(npos_total, dtype=np.uint64)
             else:
-                if m.version >= PFOR_ALL_VERSION:
-                    ne = m.npos.astype(np.int64) > 0
-                    pd_all = _for_unpack_ragged(
-                        buf,
-                        (pos_base + pos_off[:-1]).astype(np.int64)[ne],
-                        m.npos.astype(np.int64)[ne])
-                else:
-                    pd_all, _ = _varint_decode(buf, npos_total, pos_base,
-                                               ctx_base)
-                dstarts = np.zeros(nd, dtype=np.int64)
-                dstarts[1:] = np.cumsum(tf[:-1]).astype(np.int64)
-                csum = np.cumsum(pd_all, dtype=np.uint64)
-                base = np.repeat(np.arange(nd), tf.astype(np.int64))
-                start_csum = csum[dstarts[base]] - pd_all[dstarts[base]]
-                out["positions"] = csum - start_csum
-            if m.version >= PFOR_ALL_VERSION:
-                ne = m.npos.astype(np.int64) > 0
-                out["ctxs"] = _for_unpack_ragged(
-                    buf, (ctx_base + ctx_off[:-1]).astype(np.int64)[ne],
-                    m.npos.astype(np.int64)[ne])
-            else:
-                cb = buf[ctx_base: ctx_base + 3 * npos_total] \
-                    .reshape(npos_total, 3).astype(np.uint32)
-                out["ctxs"] = (cb[:, 0] | (cb[:, 1] << 8)
-                               | (cb[:, 2] << 16)).astype(np.uint64)
+                pdelta, _ = _varint_decode(buf, npos_total, pos_base,
+                                           ctx_base)
+                out["positions"] = _abs_positions(pdelta, tf)
+            out["ctxs"] = _unpack_ctx(buf, ctx_base, npos_total)
         return out
 
+    sel = sorted(int(b) for b in block_idx)
     out_docs, out_tfs, out_dls, out_rks = [], [], [], []
     out_pos, out_ctx = [], []
     for bi in sel:
         cnt = m.block_doc_count(bi)
-        if m.version >= PFOR_VERSION:
-            d = _for_unpack(buf, docs_base + int(doc_off[bi]), cnt)
-        else:
-            d, _ = _varint_decode(buf, cnt, docs_base + int(doc_off[bi]),
-                                  docs_base + int(doc_off[bi + 1]))
-        docs = np.cumsum(d, dtype=np.uint64) + m.block_base[bi]
-        o = tfdl_base + int(tfdl_off[bi])
-        o_end = tfdl_base + int(tfdl_off[bi + 1])
-        if m.version >= PFOR_ALL_VERSION:
-            tf = _for_unpack(buf, o, cnt)
-            o2 = o + _for_packed_nbytes(int(buf[o]), cnt)
-            dl = _for_unpack(buf, o2, cnt)
-            o3 = o2 + _for_packed_nbytes(int(buf[o2]), cnt)
-            rk = _for_unpack(buf, o3, cnt)
-        else:
-            tdr, _ = _varint_decode(buf, 3 * cnt, o, o_end)
-            tf = tdr[:cnt]
-            dl = tdr[cnt:2 * cnt]
-            rk = tdr[2 * cnt:]
-        out_docs.append(docs)
+        d = _for_unpack(buf, docs_base + int(doc_off[bi]), cnt)
+        out_docs.append(np.cumsum(d, dtype=np.uint64) + m.block_base[bi])
+        tdr, _ = _varint_decode(buf, 3 * cnt, tfdl_base + int(tfdl_off[bi]),
+                                tfdl_base + int(tfdl_off[bi + 1]))
+        tf = tdr[:cnt]
         out_tfs.append(tf)
-        out_dls.append(dl)
-        out_rks.append(rk)
+        out_dls.append(tdr[cnt:2 * cnt])
+        out_rks.append(tdr[2 * cnt:])
         if with_positions:
             npos = int(m.npos[bi])
-            if m.version >= PFOR_ALL_VERSION:
-                pd = (_for_unpack(buf, pos_base + int(pos_off[bi]), npos)
-                      if npos else np.empty(0, dtype=np.uint64))
-            else:
-                pd, _ = _varint_decode(buf, npos,
+            pdelta, _ = _varint_decode(buf, npos,
                                        pos_base + int(pos_off[bi]),
                                        pos_base + int(pos_off[bi + 1]))
-            # reconstruct absolute positions: cumsum reset at doc starts
-            starts = np.zeros(cnt, dtype=np.int64)
-            starts[1:] = np.cumsum(tf[:-1]).astype(np.int64)
-            csum = np.cumsum(pd, dtype=np.uint64)
-            base = np.repeat(np.arange(cnt), tf.astype(np.int64))
-            start_csum = csum[starts[base]] - pd[starts[base]]
-            out_pos.append(csum - start_csum)
-            if m.version >= PFOR_ALL_VERSION:
-                out_ctx.append(
-                    _for_unpack(buf, ctx_base + int(ctx_off[bi]), npos)
-                    .astype(np.uint32)
-                    if npos else np.empty(0, dtype=np.uint32))
-            else:
-                cs = ctx_base + 3 * int(npos_off[bi])
-                cb = buf[cs: cs + 3 * npos].reshape(npos, 3) \
-                    .astype(np.uint32)
-                out_ctx.append(cb[:, 0] | (cb[:, 1] << 8)
-                               | (cb[:, 2] << 16))
-    cat = (lambda lst, dt=np.uint64: np.concatenate(lst)
-           if lst else np.empty(0, dtype=dt))
+            out_pos.append(_abs_positions(pdelta, tf))
+            out_ctx.append(_unpack_ctx(
+                buf, ctx_base + 3 * int(npos_off[bi]), npos))
+    cat = (lambda lst: np.concatenate(lst) if lst
+           else np.empty(0, dtype=np.uint64))
     return {
         "doc_ids": cat(out_docs), "tfs": cat(out_tfs),
         "doclens": cat(out_dls), "ranks": cat(out_rks),
-        "positions": cat(out_pos), "ctxs": cat([c.astype(np.uint64) for c in out_ctx]),
+        "positions": cat(out_pos), "ctxs": cat(out_ctx),
         "block_max_tf": m.bmax_tf, "block_min_dl": m.bmin_dl,
         "blocks_decoded": len(sel),
     }
@@ -1117,19 +849,15 @@ def blocks_for_candidates(meta: BlockMeta, candidates: np.ndarray) -> np.ndarray
 def bm25_block_ubs(meta: BlockMeta, idf: float, k1: float, b: float,
                    avgdl: float) -> np.ndarray:
     """Per-block BM25 upper bounds (PosdbTable.cpp:4494
-    getMaxPossibleScore analog).
-
-    Without the frontier: kernel(bmax_tf, bmin_dl) — sound (monotone up
-    in tf, down in dl) but it pairs the max tf with the min dl of
-    DIFFERENT docs, so on flat-tf termlists every block bounds the
-    same and nothing prunes.
-
-    With the frontier (r5): max over tf bands of kernel(band_tf_cap,
-    band_min_dl), where band_min_dl is the min dl among docs whose tf
-    reaches the band threshold — each band's entry dominates every doc
-    in that band (its tf <= cap, its dl >= the band min), and every
-    doc falls in some band, so the max is a sound per-doc bound that
-    tracks (tf, dl) pairs real docs achieve."""
+    getMaxPossibleScore analog): max over tf bands of
+    kernel(band_tf_cap, band_min_dl), where band_min_dl is the min dl
+    among docs whose tf reaches the band threshold — each band's entry
+    dominates every doc in that band (its tf <= cap, its dl >= the band
+    min), and every doc falls in some band, so the max is a sound
+    per-doc bound that tracks (tf, dl) pairs real docs achieve. It
+    never exceeds the naive kernel(bmax_tf, bmin_dl), which pairs the
+    max tf with the min dl of DIFFERENT docs, so on flat-tf termlists
+    every block would bound the same and nothing would prune."""
 
     def kern(tf, dl):
         return (idf * (tf * (k1 + 1.0))
@@ -1137,8 +865,6 @@ def bm25_block_ubs(meta: BlockMeta, idf: float, k1: float, b: float,
 
     tf_max = meta.bmax_tf.astype(np.float64)
     dl_min = meta.bmin_dl.astype(np.float64)
-    if not meta.frontier:
-        return kern(tf_max, dl_min)
     # band [1,1]: tf-1 docs (dl >= block min); bands [2,3] [4,7]
     # [8,inf): capped tf with the band's own min dl (0 = band empty)
     ub = kern(np.minimum(tf_max, 1.0), dl_min)
@@ -1163,258 +889,160 @@ def wand_prune_blocks(meta: BlockMeta, idf: float, k1: float, b: float,
         bm25_block_ubs(meta, idf, k1, b, avgdl) >= threshold)
 
 
-def merge_disjoint_blobs(blobs: list[bytes],
-                         docid_codec: str = "varint") -> bytes:
-    """Merge same-term mini-segment blobs of ONE build generation
-    (RdbList.cpp:2154 posdbMerge_r fast path): no newest-wins
-    resolution, fully numpy-vectorized span gather. A doc MAY appear in
-    more than one source blob (its body postings come from its own
-    partition, its incoming-link-text postings from the linkers'
-    partitions): duplicate docs are combined — tf summed, positions
-    re-sorted ascending within the doc (the reference's mini-merge keeps
-    each docId's positions sorted, PosdbTable.cpp:2879)."""
-    decoded = [d for d in (decode_postings(b) for b in blobs)
-               if len(d["doc_ids"])]
-    if not decoded:
-        # nothing to merge (no blobs, or every blob decoded empty):
-        # a well-formed empty blob, not a concatenate ValueError
-        z = np.empty(0, dtype=np.uint64)
-        return encode_postings(z, z, z, z, z, z,
-                               docid_codec=docid_codec)
-    docs = np.concatenate([d["doc_ids"] for d in decoded])
-    tfs = np.concatenate([d["tfs"] for d in decoded]).astype(np.int64)
-    dls = np.concatenate([d["doclens"] for d in decoded])
-    ranks = np.concatenate([d["ranks"] for d in decoded])
-    pos = np.concatenate([d["positions"] for d in decoded])
-    ctx = np.concatenate([d["ctxs"] for d in decoded])
-    # absolute start of each doc's position span in the concatenated
-    # pos/ctx streams
-    starts = np.empty(len(docs), dtype=np.int64)
-    off = 0
-    i = 0
-    for d in decoded:
-        t = d["tfs"].astype(np.int64)
-        n = len(t)
-        if n:
-            s = np.concatenate(([0], np.cumsum(t[:-1])))
-            starts[i:i + n] = s + off
-            off += int(t.sum())
-            i += n
-    order = np.argsort(docs, kind="stable")
-    s_docs = docs[order]
-    s_start = starts[order]
-    s_tf = tfs[order]
-    total = int(s_tf.sum())
-    if total:
-        ends = np.cumsum(s_tf)
-        idx = (np.arange(total, dtype=np.int64)
-               - np.repeat(ends - s_tf, s_tf)
-               + np.repeat(s_start, s_tf))
-        pos_out = pos[idx].astype(np.uint64)
-        ctx_out = ctx[idx].astype(np.uint64)
-    else:
-        pos_out = np.empty(0, dtype=np.uint64)
-        ctx_out = np.empty(0, dtype=np.uint64)
+def _concat_postings(blobs: list[bytes]) -> dict:
+    """Decode ``blobs`` and concatenate their arrays in blob order — the
+    input side of every merge. Besides the decoded arrays (``tfs`` as
+    int64) it holds ``src``, the index of each doc's source blob, and
+    ``pstart``, the start of each doc's span in the concatenated
+    ``positions``/``ctxs``; ``_take_postings`` gathers from it."""
+    decoded = [decode_postings(b) for b in blobs]
+    out = {k: (np.concatenate([d[k] for d in decoded]) if decoded
+               else np.empty(0, dtype=np.uint64))
+           for k in ("doc_ids", "tfs", "doclens", "ranks", "positions",
+                     "ctxs")}
+    tfs = out["tfs"] = out["tfs"].astype(np.int64)
+    out["src"] = np.repeat(np.arange(len(decoded), dtype=np.int64),
+                           [len(d["doc_ids"]) for d in decoded])
+    out["pstart"] = np.cumsum(tfs) - tfs
+    return out
 
-    dup = len(s_docs) > 1 and bool((s_docs[1:] == s_docs[:-1]).any())
-    if not dup:
-        return encode_postings(
-            s_docs.astype(np.uint64), s_tf.astype(np.uint64),
-            dls[order].astype(np.uint64), pos_out, ctx_out,
-            ranks[order].astype(np.uint64), docid_codec=docid_codec)
 
-    # combine duplicate docs: sum tf, keep first dl/rank (same doc ->
-    # same attrs), re-sort the doc's positions ascending
-    first = np.empty(len(s_docs), dtype=bool)
-    first[0] = True
-    first[1:] = s_docs[1:] != s_docs[:-1]
-    dstarts = np.flatnonzero(first)
-    u_docs = s_docs[dstarts]
-    u_tf = np.add.reduceat(s_tf.astype(np.int64), dstarts)
-    u_dl = dls[order][dstarts]
-    u_rk = ranks[order][dstarts]
-    doc_of_post = np.repeat(np.cumsum(first) - 1, s_tf.astype(np.int64))
-    porder = np.lexsort((pos_out, doc_of_post))
-    return encode_postings(
-        u_docs.astype(np.uint64), u_tf.astype(np.uint64),
-        u_dl.astype(np.uint64), pos_out[porder], ctx_out[porder],
-        u_rk.astype(np.uint64), docid_codec=docid_codec)
+def _take_postings(c: dict, idx: np.ndarray) -> tuple:
+    """The docs at indices ``idx`` of a ``_concat_postings`` result,
+    each with its position/ctx span: (doc_ids, tfs, doclens,
+    positions, ctxs, ranks)."""
+    tf = c["tfs"][idx]
+    ends = np.cumsum(tf)
+    total = int(ends[-1]) if len(ends) else 0
+    pidx = (np.arange(total, dtype=np.int64) - np.repeat(ends - tf, tf)
+            + np.repeat(c["pstart"][idx], tf))
+    return (c["doc_ids"][idx], tf, c["doclens"][idx],
+            c["positions"][pidx], c["ctxs"][pidx], c["ranks"][idx])
+
+
+def _group_of_doc(groups: list[list[bytes]], c: dict) -> np.ndarray:
+    """Group index of every doc of ``_concat_postings(flattened
+    groups)``."""
+    return np.repeat(np.arange(len(groups), dtype=np.int64),
+                     [len(g) for g in groups])[c["src"]]
+
+
+def _encode_groups(ngrp: int, grp: np.ndarray, docs: np.ndarray,
+                   tfs: np.ndarray, doclens: np.ndarray,
+                   positions: np.ndarray, ctxs: np.ndarray,
+                   ranks: np.ndarray):
+    """ONE bulk encode of per-group doc runs (``grp`` non-decreasing,
+    docs ascending within a group, positions/ctxs aligned with tfs) ->
+    ``(blobs, df, cf, max_tf)`` for groups 0..ngrp-1; a group with no
+    docs gets the empty blob and zero stats."""
+    df = np.bincount(grp, minlength=ngrp).astype(np.int64)
+    nonempty = df > 0
+    cf = np.zeros(ngrp, dtype=np.int64)
+    max_tf = np.zeros(ngrp, dtype=np.int64)
+    gstarts = np.cumsum(df[nonempty]) - df[nonempty]
+    cf[nonempty] = np.add.reduceat(tfs, gstarts)
+    max_tf[nonempty] = np.maximum.reduceat(tfs, gstarts)
+    encoded = iter(encode_postings_many(df[nonempty], docs, tfs, doclens,
+                                        ranks, positions, ctxs))
+    z = np.empty(0, dtype=np.uint64)
+    empty = encode_postings(z, z, z, z, z, z)
+    blobs = [next(encoded) if ok else empty for ok in nonempty]
+    return blobs, df, cf, max_tf
+
+
+def merge_disjoint_blobs(blobs: list[bytes]) -> bytes:
+    """Merge same-term mini-segment blobs of ONE build generation into
+    one blob (duplicate docs combined as in
+    ``merge_disjoint_blobs_many``). One group, one ``encode_postings``:
+    the per-group reference the batched merge is tested against."""
+    c = _concat_postings(blobs)
+    order = np.argsort(c["doc_ids"], kind="stable")
+    docs, tfs, dls, pos, ctx, rks = _take_postings(c, order)
+    if not len(docs):
+        return encode_postings(docs, tfs, dls, pos, ctx, rks)
+    u_docs, dstarts = np.unique(docs, return_index=True)
+    # re-sort each merged doc's positions ascending (ctx follows)
+    porder = np.lexsort((pos, np.repeat(np.searchsorted(u_docs, docs),
+                                        tfs)))
+    return encode_postings(u_docs, np.add.reduceat(tfs, dstarts),
+                           dls[dstarts], pos[porder], ctx[porder],
+                           rks[dstarts])
 
 
 def merge_disjoint_blobs_many(
     groups: list[list[bytes]],
-    docid_codec: str = "varint",
 ) -> tuple[list[bytes], np.ndarray, np.ndarray, np.ndarray]:
-    """Batched ``merge_disjoint_blobs``: merge EVERY group of same-key
-    mini-segment blobs with one shared sort and ONE bulk re-encode
-    (``encode_postings_many``) instead of a per-group encode — the
-    per-group numpy fixed costs made the C2 blob merge the segment
-    stage's second-hottest path after the C1 encode. Byte-identical
-    per group to ``merge_disjoint_blobs``.
+    """Merge EVERY group of same-key mini-segment blobs of ONE build
+    generation (RdbList.cpp:2154 posdbMerge_r fast path) with one shared
+    sort and ONE bulk re-encode — per-group numpy fixed costs made the
+    blob merge the segment stage's second-hottest path after the mini
+    encode. No newest-wins resolution: a doc MAY appear in more than one
+    blob of a group (its body postings come from its own partition, its
+    incoming-link-text postings from the linkers' partitions), and such
+    duplicates are combined — tf summed, first dl/rank kept (same doc
+    -> same attrs), positions re-sorted ascending within the doc (the
+    reference's mini-merge keeps each docId's positions sorted,
+    PosdbTable.cpp:2879).
 
     Returns ``(blobs, df, cf, max_tf)`` in group order, so callers
     get the merged stats without re-parsing block directories.
     """
-    ngrp = len(groups)
-    if ngrp == 0:
-        return ([], np.empty(0, np.int64), np.empty(0, np.int64),
-                np.empty(0, np.int64))
-    docs_l, tfs_l, dls_l, rks_l = [], [], [], []
-    pos_l, ctx_l, grp_l = [], [], []
-    for gi, blobs in enumerate(groups):
-        for b in blobs:
-            d = decode_postings(b)
-            n = len(d["doc_ids"])
-            if not n:
-                continue
-            docs_l.append(d["doc_ids"])
-            tfs_l.append(d["tfs"].astype(np.int64))
-            dls_l.append(d["doclens"])
-            rks_l.append(d["ranks"])
-            pos_l.append(d["positions"])
-            ctx_l.append(d["ctxs"])
-            grp_l.append(np.full(n, gi, dtype=np.int64))
-    if not docs_l:
-        # every blob in every group decoded empty: the run_nd==0
-        # fallback below would be unreachable (the concatenates raise
-        # first), so take the per-group path here
-        blobs_pg = [merge_disjoint_blobs(g, docid_codec=docid_codec)
-                    for g in groups]
-        metas = [BlockMeta(b) for b in blobs_pg]
-        return (blobs_pg,
-                np.array([m.n_docs for m in metas], dtype=np.int64),
-                np.array([int(m.npos.sum()) for m in metas],
-                         dtype=np.int64),
-                np.array([int(m.bmax_tf.max()) if m.nblocks else 0
-                          for m in metas], dtype=np.int64))
-    docs = np.concatenate(docs_l)
-    tfs = np.concatenate(tfs_l)
-    dls = np.concatenate(dls_l)
-    ranks = np.concatenate(rks_l)
-    pos = np.concatenate(pos_l)
-    ctx = np.concatenate(ctx_l)
-    grp = np.concatenate(grp_l)
-    # absolute start of each doc's position span in the concatenated
-    # pos/ctx streams
-    starts = np.empty(len(docs), dtype=np.int64)
-    off = i = 0
-    for t in tfs_l:
-        n = len(t)
-        s = np.concatenate(([0], np.cumsum(t[:-1])))
-        starts[i:i + n] = s + off
-        off += int(t.sum())
-        i += n
+    c = _concat_postings([b for g in groups for b in g])
+    grp = _group_of_doc(groups, c)
     # stable (group, doc) order == per-group argsort(docs, stable)
-    order = np.lexsort((docs, grp))
+    order = np.lexsort((c["doc_ids"], grp))
     s_grp = grp[order]
-    s_docs = docs[order]
-    s_start = starts[order]
-    s_tf = tfs[order]
-    total = int(s_tf.sum())
-    if total:
-        ends = np.cumsum(s_tf)
-        idx = (np.arange(total, dtype=np.int64)
-               - np.repeat(ends - s_tf, s_tf)
-               + np.repeat(s_start, s_tf))
-        pos_out = pos[idx].astype(np.uint64)
-        ctx_out = ctx[idx].astype(np.uint64)
-    else:
-        pos_out = np.empty(0, dtype=np.uint64)
-        ctx_out = np.empty(0, dtype=np.uint64)
-
-    # combine duplicate docs within a group (body vs inlink-text
-    # partitions): sum tf, keep first dl/rank, re-sort the merged
-    # doc's positions ascending — a no-dup group passes through this
-    # path unchanged (its porder is the identity), so one code path
-    # serves both and stays byte-identical to merge_disjoint_blobs
-    first = np.empty(len(s_docs), dtype=bool)
-    first[0] = True
-    first[1:] = (s_docs[1:] != s_docs[:-1]) | (s_grp[1:] != s_grp[:-1])
+    docs, tfs, dls, pos, ctx, rks = _take_postings(c, order)
+    first = np.ones(len(docs), dtype=bool)
+    first[1:] = (docs[1:] != docs[:-1]) | (s_grp[1:] != s_grp[:-1])
     dstarts = np.flatnonzero(first)
-    u_docs = s_docs[dstarts]
-    u_grp = s_grp[dstarts]
-    u_tf = np.add.reduceat(s_tf, dstarts)
-    u_dl = dls[order][dstarts]
-    u_rk = ranks[order][dstarts]
     if not first.all():
-        doc_of_post = np.repeat(np.cumsum(first) - 1, s_tf)
-        porder = np.lexsort((pos_out, doc_of_post))
-        pos_out = pos_out[porder]
-        ctx_out = ctx_out[porder]
+        doc_of_post = np.repeat(np.cumsum(first) - 1, tfs)
+        porder = np.lexsort((pos, doc_of_post))
+        pos = pos[porder]
+        ctx = ctx[porder]
+    return _encode_groups(len(groups), s_grp[dstarts], docs[dstarts],
+                          np.add.reduceat(tfs, dstarts), dls[dstarts],
+                          pos, ctx, rks[dstarts])
 
-    run_nd = np.bincount(u_grp, minlength=ngrp)
-    if (run_nd == 0).any():
-        # a group whose blobs were all empty (can't happen for mini
-        # rows, which always hold >=1 posting): per-group fallback
-        blobs_pg = [merge_disjoint_blobs(g, docid_codec=docid_codec)
-                    for g in groups]
-        metas = [BlockMeta(b) for b in blobs_pg]
-        return (blobs_pg,
-                np.array([m.n_docs for m in metas], dtype=np.int64),
-                np.array([int(m.npos.sum()) for m in metas],
-                         dtype=np.int64),
-                np.array([int(m.bmax_tf.max()) if m.nblocks else 0
-                          for m in metas], dtype=np.int64))
-    gstarts = np.zeros(ngrp, dtype=np.int64)
-    gstarts[1:] = np.cumsum(run_nd)[:-1]
-    cf = np.add.reduceat(u_tf, gstarts).astype(np.int64)
-    max_tf = np.maximum.reduceat(u_tf, gstarts).astype(np.int64)
-    blobs_out = encode_postings_many(
-        run_nd, u_docs.astype(np.uint64), u_tf.astype(np.uint64),
-        u_dl.astype(np.uint64), u_rk.astype(np.uint64),
-        pos_out, ctx_out, docid_codec=docid_codec)
-    return blobs_out, run_nd.astype(np.int64), cf, max_tf
+
+def merge_blobs_many(groups: list[list[bytes]], gens: list[list[int]],
+                     live=None):
+    """K-way merge of EVERY group of same-term blobs from multiple
+    segment generations (``gens[i][j]`` is the generation of
+    ``groups[i][j]``): newest-wins per docId within a group, after
+    dropping the postings ``live(doc_ids, gens) -> bool mask`` rejects
+    (negative-key annihilation, RdbList.cpp:1945-2043 /
+    posdbMerge_r). One shared sort and ONE bulk re-encode; returns
+    ``(blobs, df, cf, max_tf)`` in group order, a group with no
+    surviving doc merging to the empty blob."""
+    c = _concat_postings([b for g in groups for b in g])
+    grp = _group_of_doc(groups, c)
+    gen = np.array([x for g in gens for x in g], dtype=np.int64)[c["src"]]
+    docs = c["doc_ids"]
+    idx = (np.arange(len(docs), dtype=np.int64) if live is None
+           else np.flatnonzero(live(docs, gen)))
+    order = idx[np.lexsort((gen[idx], docs[idx], grp[idx]))]
+    s_docs, s_grp = docs[order], grp[order]
+    last = np.ones(len(order), dtype=bool)
+    last[:-1] = (s_docs[:-1] != s_docs[1:]) | (s_grp[:-1] != s_grp[1:])
+    keep = order[last]
+    return _encode_groups(len(groups), grp[keep],
+                          *_take_postings(c, keep))
 
 
 def merge_blobs(blobs: list[bytes],
                 deleted_doc_ids: np.ndarray | None = None,
-                docid_codec: str = "varint") -> bytes:
-    """K-way merge of same-term blobs from multiple segment generations,
-    newest-wins per docId, dropping deleted docIds (negative-key
-    annihilation, RdbList.cpp:1945-2043 / posdbMerge_r). `blobs` ordered
-    oldest -> newest."""
-    decoded = [decode_postings(b) for b in blobs]
-    all_docs = np.concatenate([d["doc_ids"] for d in decoded])
-    gen = np.concatenate(
-        [np.full(len(d["doc_ids"]), g, dtype=np.int64) for g, d in enumerate(decoded)]
-    )
-    order = np.lexsort((gen, all_docs))
-    docs_sorted = all_docs[order]
-    keep_mask = np.ones(len(order), dtype=bool)
-    keep_mask[:-1] = docs_sorted[:-1] != docs_sorted[1:]
-    keep = order[keep_mask]
+                docid_codec: str = "pfor") -> bytes:
+    """Newest-wins merge of ONE term's blobs, ordered oldest -> newest,
+    dropping ``deleted_doc_ids`` — a one-group ``merge_blobs_many``.
+    ``docid_codec`` accepts only "pfor"."""
+    check_docid_codec(docid_codec)
+    live = None
     if deleted_doc_ids is not None and len(deleted_doc_ids):
         dd = np.asarray(deleted_doc_ids, dtype=np.uint64)
-        keep = keep[~np.isin(all_docs[keep], dd)]
-    src_of = np.concatenate(
-        [np.full(len(d["doc_ids"]), g, dtype=np.int64) for g, d in enumerate(decoded)]
-    )
-    local_ix = np.concatenate(
-        [np.arange(len(d["doc_ids"]), dtype=np.int64) for d in decoded]
-    )
-    keep = keep[np.argsort(all_docs[keep], kind="stable")]
-    out_docs, out_tfs, out_dls, out_ranks = [], [], [], []
-    out_pos, out_ctx = [], []
-    for k in keep:
-        d = decoded[src_of[k]]
-        i = local_ix[k]
-        tf = int(d["tfs"][i])
-        ps = int(np.sum(d["tfs"][:i]))
-        out_docs.append(d["doc_ids"][i])
-        out_tfs.append(tf)
-        out_dls.append(d["doclens"][i])
-        out_ranks.append(d["ranks"][i])
-        out_pos.append(d["positions"][ps: ps + tf])
-        out_ctx.append(d["ctxs"][ps: ps + tf])
-    if not out_docs:
-        return encode_postings(*[np.empty(0, dtype=np.uint64)] * 6,
-                               docid_codec=docid_codec)
-    return encode_postings(
-        np.array(out_docs, dtype=np.uint64),
-        np.array(out_tfs, dtype=np.uint64),
-        np.array(out_dls, dtype=np.uint64),
-        np.concatenate(out_pos) if out_pos else np.empty(0, dtype=np.uint64),
-        np.concatenate(out_ctx) if out_ctx else np.empty(0, dtype=np.uint64),
-        np.array(out_ranks, dtype=np.uint64),
-        docid_codec=docid_codec,
-    )
+
+        def live(docs, gens):
+            return ~np.isin(docs, dd)
+    return merge_blobs_many([blobs], [list(range(len(blobs)))],
+                            live)[0][0]

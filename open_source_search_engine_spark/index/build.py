@@ -58,7 +58,6 @@ from pyspark.sql import types as T
 
 from ..config import DEFAULT_CONF, EngineConf
 from ..functions import gbhash
-from ..functions.codec import encode_postings
 from ..functions.extractor import absolute_url
 from ..functions.gbhash import (
     TERMID_MASK,
@@ -168,13 +167,14 @@ PFX_SORTBYINT = prefix_hash("gbsortbyint")  # XmlDoc_Indexing.cpp:2371
 # at :627 "index the wanted meta tags as normal text without prefix")
 CUSTOM_META_TAGS = ("author", "subject", "abstract", "news_keywords")
 
-# index format version: bump when the set/shape of emitted terms changes
-# (codec blob layout has its own CODEC_VERSION); cached index dirs are
-# keyed on both so builds rerun after a format change
-# r3: codec v3 block bounds (v9); non-body position continuation via
-# the shared m_dist cursor (v10); threshold salting with SALT_SHARED
-# cold runs + layout-general WAND (v11)
-INDEX_FORMAT_VERSION = 13  # r5: block-meta tf->min-dl frontier arrays
+# index format version: bump when the set/shape of emitted terms changes.
+# The posting-blob layout is versioned separately by codec.CODEC_VERSION
+# (one format: v4 with the tf->min-dl frontier). Cached index dirs are
+# keyed on both so builds rerun after a format change.
+# History: non-body position continuation via the shared m_dist cursor
+# (v10); threshold salting with SALT_SHARED cold runs + layout-general
+# WAND (v11); block-meta frontier arrays (v13)
+INDEX_FORMAT_VERSION = 13
 
 
 def _effective_salt_min_df(conf, n_docs: int) -> int:
@@ -690,8 +690,7 @@ SEGMENT_SCHEMA = T.StructType(
 
 def _encode_runs(term: np.ndarray, salt: np.ndarray, doc: np.ndarray,
                  pos: np.ndarray, ctx: np.ndarray, dl: np.ndarray,
-                 rank: np.ndarray, n_buckets: int,
-                 docid_codec: str = "varint") -> pd.DataFrame:
+                 rank: np.ndarray, n_buckets: int) -> pd.DataFrame:
     """Encode a frame of postings SORTED by (term_id, salt, doc_id, pos)
     into one segment row per (term_id, salt) run (the RdbDump
     memtable->sorted-file compression, RdbDump.cpp + Posdb.h:228-233).
@@ -722,8 +721,7 @@ def _encode_runs(term: np.ndarray, salt: np.ndarray, doc: np.ndarray,
 
     blobs = encode_postings_many(
         run_nd, docs_d, tf_d, dl_d, rk_d,
-        pos.astype(np.uint64), ctx.astype(np.uint64),
-        docid_codec=docid_codec)
+        pos.astype(np.uint64), ctx.astype(np.uint64))
     return pd.DataFrame({
         "bucket": (run_tid % n_buckets).astype(np.int64),
         "term_id": run_tid.astype(np.int64),
@@ -947,8 +945,7 @@ SALT_SHARED = -1  # salt of an unsalted (cold-term) run: holds docs of
 #                   to all salt groups and residue-masks at use
 
 
-def make_mini_encoder(n_buckets: int, n_salts: int, hot_ids: np.ndarray,
-                      docid_codec: str = "varint"):
+def make_mini_encoder(n_buckets: int, n_salts: int, hot_ids: np.ndarray):
     """mapInPandas body over the PARSED rows (narrow — no posting-row
     shuffle): sorts the partition's postings in numpy and encodes one
     mini-segment blob per (term_id, salt) run — the memtable dump of the
@@ -983,14 +980,12 @@ def make_mini_encoder(n_buckets: int, n_salts: int, hot_ids: np.ndarray,
             salt = np.full(len(t), SALT_SHARED, dtype=np.int64)
         order = np.lexsort((p, d, salt, t))
         yield _encode_runs(t[order], salt[order], d[order], p[order],
-                           c[order], dl[order], rk[order], n_buckets,
-                           docid_codec=docid_codec)
+                           c[order], dl[order], rk[order], n_buckets)
 
     return encode_mini
 
 
-def _merge_runs(pdf: pd.DataFrame, bulk: bool = True,
-                docid_codec: str = "varint") -> pd.DataFrame:
+def _merge_runs(pdf: pd.DataFrame, bulk: bool = True) -> pd.DataFrame:
     """Merge a frame of mini-segment rows SORTED by (term_id, salt) into
     one segment row per (term_id, salt): single-blob runs pass through
     byte-identical (the common case — rare terms live in one map
@@ -1032,16 +1027,13 @@ def _merge_runs(pdf: pd.DataFrame, bulk: bool = True,
         groups = [[bytes(blobs_col.iloc[s + j]) for j in range(n)]
                   for s, n in zip(multi_starts, multi_lens)]
         if not bulk:
-            parts = [merge_disjoint_blobs_many([g],
-                                               docid_codec=docid_codec)
-                     for g in groups]
+            parts = [merge_disjoint_blobs_many([g]) for g in groups]
             blobs = [p[0][0] for p in parts]
             df_g = np.concatenate([p[1] for p in parts])
             cf_g = np.concatenate([p[2] for p in parts])
             mx_g = np.concatenate([p[3] for p in parts])
         else:
-            blobs, df_g, cf_g, mx_g = merge_disjoint_blobs_many(
-                groups, docid_codec=docid_codec)
+            blobs, df_g, cf_g, mx_g = merge_disjoint_blobs_many(groups)
         out_frames.append(pd.DataFrame({
             "bucket": bucket_col[multi_starts],
             "term_id": term[multi_starts],
@@ -1056,72 +1048,26 @@ def _merge_runs(pdf: pd.DataFrame, bulk: bool = True,
 
 
 def make_compact_merge(edocs: np.ndarray, egens: np.ndarray,
-                       docid_codec: str = "varint"):
+                       bulk: bool = True):
     """mapInPandas body for COMPACTION (cross-generation k-way merge,
     RdbList.cpp:2154 posdbMerge_r + negative-key annihilation
     RdbList.cpp:1945-2043): input mini rows sorted by (term_id, salt,
     gen). Doc-event resolution (RdbIndex semantics): a posting at gen g
     is live iff its doc has no event or its newest event is a re-index
     at exactly g (keep_gen == g); keep_gen == -1 means tombstoned.
-    Fully vectorized: dead-filter + newest-wins dedup + position span
-    gather, no per-doc python loop."""
-    from ..functions.codec import decode_postings, encode_postings
+    Runs merge through codec.merge_blobs_many (dead-filter +
+    newest-wins + bulk re-encode); runs left with no live doc emit no
+    row. ``bulk`` as in ``_merge_runs``: True merges every run of an
+    Arrow batch in one call, False one run per call (a working set of
+    one run, for wide nodes)."""
+    from ..functions.codec import merge_blobs_many
 
     has_events = len(edocs) > 0
 
-    def merge_run(blobs: list[bytes], blob_gens: list[int]):
-        decoded = [decode_postings(b) for b in blobs]
-        docs = np.concatenate([d["doc_ids"] for d in decoded])
-        if not len(docs):
-            return None
-        tfs = np.concatenate([d["tfs"] for d in decoded]).astype(np.int64)
-        dls = np.concatenate([d["doclens"] for d in decoded])
-        rks = np.concatenate([d["ranks"] for d in decoded])
-        pos = np.concatenate([d["positions"] for d in decoded])
-        ctx = np.concatenate([d["ctxs"] for d in decoded])
-        gens_arr = np.concatenate(
-            [np.full(len(d["doc_ids"]), g, dtype=np.int64)
-             for g, d in zip(blob_gens, decoded)])
-        starts = np.empty(len(docs), dtype=np.int64)
-        off = i = 0
-        for d in decoded:
-            t = d["tfs"].astype(np.int64)
-            n = len(t)
-            if n:
-                s = np.concatenate(([0], np.cumsum(t[:-1])))
-                starts[i:i + n] = s + off
-                off += int(t.sum())
-                i += n
-        keep = np.arange(len(docs), dtype=np.int64)
-        if has_events:
-            ei = np.searchsorted(edocs, docs)
-            eic = np.clip(ei, 0, len(edocs) - 1)
-            in_map = edocs[eic] == docs
-            dead = in_map & (egens[eic] != gens_arr)
-            keep = keep[~dead]
-        # newest-gen-wins for residual duplicates, then doc order
-        order = keep[np.lexsort((gens_arr[keep], docs[keep]))]
-        if len(order):
-            last = np.empty(len(order), dtype=bool)
-            last[-1] = True
-            last[:-1] = docs[order][:-1] != docs[order][1:]
-            keep = order[last]
-        else:
-            return None
-        if not len(keep):
-            return None
-        k_tf = tfs[keep]
-        total = int(k_tf.sum())
-        ends = np.cumsum(k_tf)
-        idx = (np.arange(total, dtype=np.int64)
-               - np.repeat(ends - k_tf, k_tf)
-               + np.repeat(starts[keep], k_tf))
-        blob = encode_postings(
-            docs[keep].astype(np.uint64), k_tf.astype(np.uint64),
-            dls[keep].astype(np.uint64), pos[idx].astype(np.uint64),
-            ctx[idx].astype(np.uint64), rks[keep].astype(np.uint64),
-            docid_codec=docid_codec)
-        return blob, int(len(keep)), total, int(k_tf.max())
+    def live(docs: np.ndarray, gens: np.ndarray) -> np.ndarray:
+        ei = np.searchsorted(edocs, docs)
+        eic = np.clip(ei, 0, len(edocs) - 1)
+        return ~((edocs[eic] == docs) & (egens[eic] != gens))
 
     def _runs(pdf: pd.DataFrame) -> pd.DataFrame:
         term = pdf["term_id"].to_numpy(np.int64)
@@ -1136,22 +1082,35 @@ def make_compact_merge(edocs: np.ndarray, egens: np.ndarray,
         if single.any():
             out_frames.append(
                 pdf.iloc[starts[single]].drop(columns=["gen"]))
-        recs = []
         blobs_col = pdf["postings"]
         gen_col = pdf["gen"].to_numpy(np.int64)
         bucket_col = pdf["bucket"].to_numpy(np.int64)
-        for s, n in zip(starts[~single], run_len[~single]):
-            r = merge_run([bytes(blobs_col.iloc[s + j]) for j in range(n)],
-                          [int(g) for g in gen_col[s:s + n]])
-            if r is None:
-                continue
-            blob, df, cf, mtf = r
-            recs.append((int(bucket_col[s]), int(term[s]), int(salt[s]),
-                         df, cf, mtf, len(blob), blob))
-        if recs:
-            out_frames.append(pd.DataFrame(
-                recs, columns=["bucket", "term_id", "salt", "df", "cf",
-                               "max_tf", "n_bytes", "postings"]))
+        m_starts, m_lens = starts[~single], run_len[~single]
+        if len(m_starts):
+            groups = [[bytes(blobs_col.iloc[s + j]) for j in range(n)]
+                      for s, n in zip(m_starts, m_lens)]
+            gens = [gen_col[s:s + n].tolist()
+                    for s, n in zip(m_starts, m_lens)]
+            keep = live if has_events else None
+            if bulk:
+                blobs, df, cf, mtf = merge_blobs_many(groups, gens, keep)
+            else:
+                parts = [merge_blobs_many([g], [gg], keep)
+                         for g, gg in zip(groups, gens)]
+                blobs = [p[0][0] for p in parts]
+                df, cf, mtf = (np.concatenate([p[i] for p in parts])
+                               for i in (1, 2, 3))
+            ok = df > 0
+            kept = [x for x, k in zip(blobs, ok) if k]
+            out_frames.append(pd.DataFrame({
+                "bucket": bucket_col[m_starts[ok]],
+                "term_id": term[m_starts[ok]],
+                "salt": salt[m_starts[ok]],
+                "df": df[ok], "cf": cf[ok], "max_tf": mtf[ok],
+                "n_bytes": np.array([len(x) for x in kept],
+                                    dtype=np.int64),
+                "postings": kept,
+            }))
         if not out_frames:
             return pd.DataFrame(
                 columns=["bucket", "term_id", "salt", "df", "cf",
@@ -1179,8 +1138,7 @@ def make_compact_merge(edocs: np.ndarray, egens: np.ndarray,
     return go
 
 
-def make_merge_partition(bulk: bool = True,
-                         docid_codec: str = "varint"):
+def make_merge_partition(bulk: bool = True):
     """mapInPandas body over mini-segment rows hash-shuffled on
     (term_id, salt) and sorted within: merges runs, carrying the
     trailing incomplete run across Arrow batch boundaries. ``bulk``
@@ -1199,9 +1157,9 @@ def make_merge_partition(bulk: bool = True,
             carry = pdf[tail]
             body = pdf[~tail]
             if len(body):
-                yield _merge_runs(body, bulk, docid_codec)
+                yield _merge_runs(body, bulk)
         if carry is not None and len(carry):
-            yield _merge_runs(carry, bulk, docid_codec)
+            yield _merge_runs(carry, bulk)
 
     return merge_partition
 
@@ -1350,16 +1308,14 @@ def build_index(
             if not (resume and os.path.exists(_manifest_path(paths, gen, b)))]
     if todo:
         mini = indexed.mapInPandas(
-            make_mini_encoder(conf.n_buckets, conf.n_salts, hot_ids,
-                              conf.docid_codec),
+            make_mini_encoder(conf.n_buckets, conf.n_salts, hot_ids),
             schema=SEGMENT_SCHEMA)
         if len(todo) < conf.n_buckets:
             mini = mini.where(F.col("bucket").isin(todo))
         seg = (
             mini.repartition(F.col("term_id"), F.col("salt"))
             .sortWithinPartitions("term_id", "salt")
-            .mapInPandas(make_merge_partition(_bulk_merge_ok(spark, conf),
-                                              conf.docid_codec),
+            .mapInPandas(make_merge_partition(_bulk_merge_ok(spark, conf)),
                          schema=SEGMENT_SCHEMA)
         )
         out = os.path.join(paths.segments, f"gen={gen}")
@@ -1495,8 +1451,8 @@ def compact_index(spark: SparkSession, index_dir: str,
     """Merge all segment generations into one new generation
     (k-way posdb merge, RdbList.cpp:2154 posdbMerge_r + RdbMerge.h):
     newest-gen-wins per (term_id, doc_id), tombstoned docs annihilated.
-    Pure Catalyst shuffle on (bucket, term_id, salt) + a vectorized
-    per-group merge UDF (codec.merge_blobs)."""
+    Catalyst shuffle on (term_id, salt) + the batched merge UDF
+    ``make_compact_merge`` (codec.merge_blobs_many)."""
     paths = IndexPaths(index_dir)
     with open(paths.meta) as f:
         meta = json.load(f)
@@ -1542,7 +1498,8 @@ def compact_index(spark: SparkSession, index_dir: str,
     (
         seg.repartition(F.col("term_id"), F.col("salt"))
         .sortWithinPartitions("term_id", "salt", "gen")
-        .mapInPandas(make_compact_merge(edocs, egens, conf.docid_codec),
+        .mapInPandas(make_compact_merge(edocs, egens,
+                                        _bulk_merge_ok(spark, conf)),
                      schema=SEGMENT_SCHEMA)
         .repartition("bucket")
         .sortWithinPartitions("term_id", "salt")
@@ -1691,9 +1648,8 @@ def merge_indexes(spark: SparkSession, in_dirs: list[str],
     (
         seg.repartition(F.col("term_id"), F.col("salt"))
         .sortWithinPartitions("term_id", "salt", "gen")
-        .mapInPandas(make_compact_merge(empty,
-                                        empty.astype(np.int64),
-                                        conf.docid_codec),
+        .mapInPandas(make_compact_merge(empty, empty.astype(np.int64),
+                                        _bulk_merge_ok(spark, conf)),
                      schema=SEGMENT_SCHEMA)
         .repartition("bucket")
         .sortWithinPartitions("term_id", "salt")

@@ -7,7 +7,8 @@ re-decodes every blob and cross-checks EVERY invariant the query path
 relies on:
 
 per-blob (distributed, Arrow-batched over the segments scan):
-  - codec version is known (v2..v5) and the block directory parses
+  - the version byte is the one supported format (codec v4 with the
+    frontier flag) and the block directory parses
   - docIds strictly increasing (the RdbMap key-order check)
   - decoded doc count == stored df; sum(tf) == stored cf;
     max(tf) == stored max_tf; blob length == stored n_bytes
@@ -15,6 +16,8 @@ per-blob (distributed, Arrow-batched over the segments scan):
   - salted rows (salt >= 0) hold ONLY docs ≡ salt (mod n_salts) —
     the WAND per-salt layout contract (build.py salt_scheme v2)
   - block-max tf metadata dominates every block's true max
+  - the tf-band -> min-dl frontier equals a re-derivation from the
+    decoded postings
 
 cross-table (Catalyst only):
   - term_stats df/cf == per-term sums over segment rows
@@ -35,7 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONF, EngineConf
-from ..functions.codec import BlockMeta, decode_postings
+from ..functions.codec import (
+    BLOCK,
+    BlockMeta,
+    _frontier_arrays,
+    decode_postings,
+)
 
 _BLOB_CHECKS = [
     "blob_decodes", "docids_sorted", "df_matches", "cf_matches",
@@ -92,14 +100,11 @@ def _blob_check_udf(n_buckets: int, n_salts: int):
                     if not bool(np.all(tfs.astype(np.int64)
                                        <= bounds[:len(tfs)])):
                         bad["block_max_dominates"] += 1
-                if meta.nblocks and meta.frontier:
                     # the tf-band -> min-dl frontier must equal a
-                    # re-derivation from the decoded postings (r5
-                    # WAND bound input; a drifted frontier silently
+                    # re-derivation from the decoded postings (WAND
+                    # bound input; a drifted frontier silently
                     # over-prunes)
-                    from ..functions.codec import _frontier_arrays
-
-                    bstarts = np.arange(0, len(docs), 128,
+                    bstarts = np.arange(0, len(docs), BLOCK,
                                         dtype=np.int64)
                     want = _frontier_arrays(
                         tfs.astype(np.uint64),

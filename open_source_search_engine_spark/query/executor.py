@@ -987,42 +987,21 @@ def _search_default(spark, rd: IndexReader, cq: CompiledQuery, k: int,
 def _wand_salts_ok(rd: IndexReader, tids: list[int],
                    dfs: dict[int, int] | None = None) -> bool:
     """True iff the per-salt WAND plan is applicable. With a
-    salt_scheme (v11+) or salt_all (v9/v10) layout declaration in meta
-    the plan is SOUND for any term mix (shared runs fan out and are
-    residue-masked), so this is purely a worth-it check: at least one
-    query term should be salted (df above the build threshold) —
-    all-cold queries have tiny lists, and fanning every shared blob to
-    every group would do n_salts x the work of a plain decode. Legacy
-    indexes fall back to the stats probe `_all_hot_salts`."""
-    c = rd.meta.get("conf", {})
-    scheme = c.get("salt_scheme")
-    if scheme is not None:
-        if dfs is None:
-            return True
-        min_df = int(scheme.get("min_df", 0))
-        return any(int(dfs.get(int(t), 0)) > min_df for t in tids)
-    if c.get("salt_all", False):
-        return True
-    return _all_hot_salts(rd, tids)
-
-
-def _all_hot_salts(rd: IndexReader, tids: list[int]) -> bool:
-    """Legacy probe (pre-salt_all indexes): True iff every query term's
-    postings are salted across the full salt range — i.e. each salt s
-    holds exactly the docs ≡ s (mod n_salts) for EVERY term, making
-    per-salt groups independent complete sub-indexes (the shard analog
-    the multi-term WAND runs on). The probe is a column-pruned stats
-    scan: (term_id, salt) rows only, blobs untouched."""
-    n_salts = rd.meta.get("conf", {}).get("n_salts", rd.conf.n_salts)
-    rows = (rd.segments_for(tids).select("term_id", "salt")
-            .groupBy("term_id")
-            .agg(F.countDistinct("salt").alias("ns"),
-                 F.min("salt").alias("lo"), F.max("salt").alias("hi"))
-            .collect())
-    if len(rows) != len(set(tids)):
+    salt_scheme layout declaration in meta the plan is SOUND for any
+    term mix (shared runs fan out and are residue-masked), so this is
+    purely a worth-it check: at least one query term should be salted
+    (df above the build threshold) — all-cold queries have tiny lists,
+    and fanning every shared blob to every group would do n_salts x
+    the work of a plain decode. An index meta without salt_scheme
+    declares no layout, so it takes the plain decode plan, which is
+    always sound."""
+    scheme = rd.meta.get("conf", {}).get("salt_scheme")
+    if scheme is None:
         return False
-    return all(r["ns"] == n_salts and r["lo"] == 0
-               and r["hi"] == n_salts - 1 for r in rows)
+    if dfs is None:
+        return True
+    min_df = int(scheme.get("min_df", 0))
+    return any(int(dfs.get(int(t), 0)) > min_df for t in tids)
 
 
 def make_wand_group(tids: list[int], idf_map: dict[int, float], k1: float,
@@ -1363,7 +1342,7 @@ def single_wand_stats(spark, index_dir: str, query: str, k: int = 10,
     blocks whose (frontier-aware) upper bound reaches the query's
     final k-th best score — exactly the set ``_search_single_wand``
     stream-decodes once its heap is warm. At 500k synthetic docs the
-    r5 tf-band frontier prunes ~86% of 'the' blocks (legacy
+    r5 tf-band frontier prunes ~86% of 'the' blocks (plain
     (bmax_tf, bmin_dl) bound: ~5%)."""
     from ..functions.codec import BlockMeta, bm25_block_ubs
 
@@ -1461,7 +1440,7 @@ def _numeric_values(rd: IndexReader, tid: int,
     XmlDoc_Indexing.cpp:2348; Posdb.h:165-176).
 
     With a range (lo/hi), blocks whose per-block value range
-    (BlockMeta.bmin_pos/bmax_pos, codec v3) doesn't intersect are
+    (BlockMeta.bmin_pos/bmax_pos) doesn't intersect are
     skipped without stream decode (VERDICT r2 #6 — isTermValueInRange
     at block instead of key granularity, PosdbTable.cpp:50). The exact
     per-doc filter still runs afterwards; pruning only removes whole
@@ -1486,8 +1465,7 @@ def _numeric_values(rd: IndexReader, tid: int,
                 if meta.nblocks == 0:
                     continue
                 btotal = meta.nblocks
-                if (meta.bmin_pos is not None
-                        and (lo_f is not None or hi_f is not None)):
+                if lo_f is not None or hi_f is not None:
                     keep = np.ones(meta.nblocks, dtype=bool)
                     if lo_f is not None:
                         keep &= meta.bmax_pos.astype(np.float64) >= lo_f

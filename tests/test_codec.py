@@ -123,6 +123,71 @@ def test_merge_multiway_order():
     d = decode_postings(merge_blobs([b1, b2, b3]))
     np.testing.assert_array_equal(d["doc_ids"], [1, 5, 10, 40, 50, 100])
 
+    # multi-block generations (> BLOCK docs each) whose doc sets
+    # overlap, plus deletions: byte-identical to encoding the
+    # newest-wins survivors directly
+    rng = np.random.default_rng(17)
+    universe = np.sort(rng.choice(1 << 30, size=900, replace=False))
+    gens, newest = [], {}
+    for g in range(3):
+        docs = np.sort(rng.choice(universe, size=300 + 50 * g,
+                                  replace=False)).astype(np.uint64)
+        _, tfs, dls, pos, ctx, rks = make_postings(rng, len(docs))
+        gens.append(encode_postings(docs, tfs, dls, pos, ctx, rks))
+        starts = np.concatenate(([0], np.cumsum(tfs)))
+        for i, doc in enumerate(docs.tolist()):
+            span = slice(int(starts[i]), int(starts[i + 1]))
+            newest[doc] = (tfs[i], dls[i], pos[span], ctx[span], rks[i])
+    deleted = rng.choice(universe, size=60, replace=False).astype(
+        np.uint64)
+    keep = sorted(set(newest) - set(deleted.tolist()))
+    assert len(keep) > 2 * BLOCK
+    want = encode_postings(
+        np.array(keep, dtype=np.uint64),
+        np.array([newest[k][0] for k in keep], dtype=np.uint64),
+        np.array([newest[k][1] for k in keep], dtype=np.uint64),
+        np.concatenate([newest[k][2] for k in keep]),
+        np.concatenate([newest[k][3] for k in keep]),
+        np.array([newest[k][4] for k in keep], dtype=np.uint64))
+    assert merge_blobs(gens, deleted_doc_ids=deleted) == want
+
+
+@pytest.mark.parametrize("version", [0x43, 0x45, 0x04])
+def test_removed_formats_raise_named_error(version):
+    """Only codec v4 with the frontier flag (0x44) is read: a v3, v5 or
+    flag-less v4 version byte raises a ValueError naming the byte,
+    never a silent fallback."""
+    from open_source_search_engine_spark.functions.codec import (
+        CODEC_VERSION,
+        FRONTIER_FLAG,
+    )
+
+    blob = _blob([3, 9, 27])
+    assert blob[0] == CODEC_VERSION | FRONTIER_FLAG == 0x44
+    bad = bytes([version]) + blob[1:]
+    for parse in (BlockMeta, decode_postings):
+        with pytest.raises(ValueError, match=f"0x{version:02x}"):
+            parse(bad)
+
+
+def test_only_pfor_docid_codec_accepted():
+    """The docid_codec keyword names the one format; anything else
+    raises instead of writing another layout."""
+    import dataclasses
+
+    from open_source_search_engine_spark.config import DEFAULT_CONF
+
+    one = np.ones(1, dtype=np.uint64)
+    args = (one * 7, one, one * 10, one * 5, one * 0, one * 0)
+    assert encode_postings(*args, docid_codec="pfor") == _blob([7])
+    for name in ("varint", "bogus"):
+        with pytest.raises(ValueError, match=name):
+            encode_postings(*args, docid_codec=name)
+        with pytest.raises(ValueError, match=name):
+            merge_blobs([_blob([1, 2])], docid_codec=name)
+        with pytest.raises(ValueError, match=name):
+            dataclasses.replace(DEFAULT_CONF, docid_codec=name)
+
 
 def test_compression_is_compact():
     # a full posting (docid+tf+dl+pos+ctx+rank) must beat the reference's
@@ -281,7 +346,7 @@ def test_encode_postings_many_byte_identical():
 @given(st.integers(1, 400), st.integers(0, 2 ** 32))
 @settings(max_examples=30, deadline=None)
 def test_v3_block_bounds_property(n_docs, seed):
-    """codec v3 per-block summaries must match a brute-force recompute:
+    """The per-block summaries must match a brute-force recompute:
     bctx packs the block's hashgroup mask + max den/div/spam ranks,
     bmin_pos/bmax_pos the block's position-value range."""
     from open_source_search_engine_spark.functions.codec import (
@@ -380,9 +445,147 @@ def test_merge_disjoint_blobs_many_byte_identical():
         assert mx[i] == int(m.bmax_tf.max())
 
 
+def test_merge_disjoint_combines_duplicate_docs():
+    """A doc present in several sources of one generation (body vs
+    inlink-text partitions) merges into ONE posting: tf summed, dl and
+    rank kept, positions (with their ctx) ascending — checked against a
+    dict-built expectation, for the per-group and the batched merge."""
+    from open_source_search_engine_spark.functions.codec import (
+        merge_disjoint_blobs,
+        merge_disjoint_blobs_many,
+    )
+
+    rng = np.random.default_rng(23)
+    universe = np.sort(rng.choice(1 << 30, size=400, replace=False))
+    attrs = {int(d): (int(rng.integers(1, 5000)), int(rng.integers(0, 1024)))
+             for d in universe}
+    want_docs: dict[int, list] = {}
+    sources = []
+    for s in range(3):
+        docs = np.sort(rng.choice(universe, size=150 + 40 * s,
+                                  replace=False))
+        tfs = rng.integers(1, 6, size=len(docs))
+        pos, ctx = [], []
+        for d, t in zip(docs.tolist(), tfs.tolist()):
+            # interleaved across sources so the merge must re-sort
+            p = np.sort(rng.choice(5000, size=t, replace=False)) * 3 + s
+            c = rng.integers(0, 1 << 19, size=t)
+            pos.append(p)
+            ctx.append(c)
+            want_docs.setdefault(d, []).extend(zip(p.tolist(), c.tolist()))
+        sources.append(encode_postings(
+            docs.astype(np.uint64), tfs.astype(np.uint64),
+            np.array([attrs[d][0] for d in docs.tolist()], np.uint64),
+            np.concatenate(pos).astype(np.uint64),
+            np.concatenate(ctx).astype(np.uint64),
+            np.array([attrs[d][1] for d in docs.tolist()], np.uint64)))
+    keep = sorted(want_docs)
+    assert len(keep) > 2 * BLOCK and len(keep) < sum(
+        len(decode_postings(b)["doc_ids"]) for b in sources)
+    posts = [sorted(want_docs[d]) for d in keep]
+    want = encode_postings(
+        np.array(keep, dtype=np.uint64),
+        np.array([len(p) for p in posts], dtype=np.uint64),
+        np.array([attrs[d][0] for d in keep], dtype=np.uint64),
+        np.array([x for p in posts for x, _ in p], dtype=np.uint64),
+        np.array([c for p in posts for _, c in p], dtype=np.uint64),
+        np.array([attrs[d][1] for d in keep], dtype=np.uint64))
+    assert merge_disjoint_blobs(sources) == want
+    other = [_blob([1, 2, 3])]
+    blobs, df, cf, mx = merge_disjoint_blobs_many([other, sources])
+    assert blobs[1] == want
+    assert (df[1], cf[1], mx[1]) == (
+        len(keep), sum(len(p) for p in posts), max(len(p) for p in posts))
+
+
+@pytest.mark.parametrize("with_events", [False, True])
+def test_compact_merge_bulk_and_per_run_agree(with_events):
+    """Compaction's merge body gives the same rows whether it merges a
+    batch's runs in one call (bulk) or one run per call (the wide-node
+    setting of ``_bulk_merge_ok``)."""
+    import pandas as pd
+
+    from open_source_search_engine_spark.index.build import (
+        make_compact_merge,
+    )
+
+    rng = np.random.default_rng(29)
+    universe = np.sort(rng.choice(1 << 30, size=500, replace=False))
+    rows = []
+    for term in range(6):
+        for gen in range(1 + term % 3):
+            docs = np.sort(rng.choice(universe, size=40 + 60 * gen,
+                                      replace=False)).astype(np.uint64)
+            _, tfs, dls, pos, ctx, rks = make_postings(rng, len(docs))
+            b = encode_postings(docs, tfs, dls, pos, ctx, rks)
+            rows.append((term % 2, term, 0, gen, len(docs),
+                         int(tfs.sum()), int(tfs.max()), len(b), b))
+    pdf = pd.DataFrame(rows, columns=["bucket", "term_id", "salt", "gen",
+                                      "df", "cf", "max_tf", "n_bytes",
+                                      "postings"])
+    edocs = np.empty(0, dtype=np.uint64)
+    egens = np.empty(0, dtype=np.int64)
+    if with_events:
+        edocs = np.sort(rng.choice(universe, size=80, replace=False))
+        egens = rng.integers(-1, 3, size=80)
+    out = {bulk: pd.concat(make_compact_merge(edocs, egens, bulk)(
+        iter([pdf.iloc[:7], pdf.iloc[7:]])), ignore_index=True)
+        for bulk in (True, False)}
+    assert len(out[True]) > 0
+    pd.testing.assert_frame_equal(out[True], out[False])
+
+
+def _pinned_postings(nd):
+    """Deterministic multi-block postings (no RNG, so the inputs cannot
+    drift): doc ids above 2^32, tf 1..11, positions and doc lengths
+    needing multi-byte varints."""
+    i = np.arange(nd, dtype=np.int64)
+    docs = (1 << 33) + np.cumsum(1 + (i * i * 7919) % 5000)
+    tfs = 1 + (i * 5) % 11
+    k = np.repeat(i, tfs)
+    pos = (np.arange(len(k)) - np.repeat(np.cumsum(tfs) - tfs, tfs)) \
+        * (1 + k % 200) + k % 97
+    ctx = (np.arange(len(k)) * 40503) % (1 << 19)
+    return tuple(a.astype(np.uint64) for a in (
+        docs, tfs, 20 + (i * 37) % 3000, pos, ctx, (i * 13) % 1024))
+
+
+# sha256 of the v4+frontier blobs of _pinned_postings(nd); they pin the
+# on-disk format, so both encoders must keep producing these bytes
+_PINNED_SHA256 = {
+    0: "8cd4ae7da223953050b55b0ee9e4d3830f3b35138a0e1b6cc5f6e6b1e52d1314",
+    1: "956498368a6dfbd237329e35b7b072e1696f88d562b408f455d61ef29b7b349a",
+    3: "fd33668f9c483612a642bba0f312e380588dafb6801c25c419ae6ca9f44e9639",
+    300: "5837e576771969f0549764bdcb7f13d62faf88f8486016b0f767f0334e54fb84",
+}
+
+
+def test_v4_blob_bytes_pinned():
+    """Format fixture: the scalar and the bulk encoder both write the
+    exact bytes of the pinned blobs (one fully spelled out)."""
+    import hashlib
+
+    from open_source_search_engine_spark.functions.codec import (
+        encode_postings_many,
+    )
+
+    def sha(b):
+        return hashlib.sha256(b).hexdigest()
+
+    assert encode_postings(*_pinned_postings(1)).hex() == (
+        "4401818080802001140203010180400000000000010001140000000000")
+    for nd, want in _PINNED_SHA256.items():
+        assert sha(encode_postings(*_pinned_postings(nd))) == want
+    runs = [_pinned_postings(nd) for nd in (1, 3, 300)]
+    got = encode_postings_many(
+        np.array([len(r[0]) for r in runs], dtype=np.int64),
+        *(np.concatenate([r[j] for r in runs]) for j in (0, 1, 2, 5, 3, 4)))
+    assert [sha(b) for b in got] == [_PINNED_SHA256[n] for n in (1, 3, 300)]
+
+
 def test_merge_disjoint_blobs_many_all_empty_groups():
-    """Every blob in every group empty: the batched merge must take the
-    per-group fallback instead of raising from an empty concatenate
+    """Every blob in every group empty: the batched merge returns empty
+    blobs and zero stats instead of raising from an empty concatenate
     (ADVICE r3 — public codec API, even though mini rows never hit it)."""
     import numpy as np
 
@@ -402,8 +605,8 @@ def test_merge_disjoint_blobs_many_all_empty_groups():
 
 
 def test_merge_disjoint_blobs_many_one_empty_group():
-    """A mixed batch where ONE group decodes empty: per-group fallback
-    results must match merge_disjoint_blobs for the non-empty groups."""
+    """A mixed batch where ONE group decodes empty: the other groups'
+    results must match merge_disjoint_blobs."""
     import numpy as np
 
     from open_source_search_engine_spark.functions.codec import (
@@ -427,157 +630,6 @@ def test_merge_disjoint_blobs_many_one_empty_group():
     assert list(df) == [0, 2]
     assert list(cf) == [0, 3]
     assert mx[1] == 2
-
-
-def test_pfor_docid_codec_parity():
-    """v4 (FOR-bitpacked docs stream) decodes identically to v3 varint
-    for full, selective, header-only, and merge paths; per-blob opt-in
-    via encode_postings(docid_codec='pfor')."""
-    rng = np.random.RandomState(11)
-    nd = 300
-    docs = np.cumsum(rng.randint(1, 5000, nd)).astype(np.uint64)
-    tfs = rng.randint(1, 4, nd).astype(np.uint64)
-    dls = rng.randint(10, 400, nd).astype(np.uint64)
-    rks = rng.randint(0, 16, nd).astype(np.uint64)
-    pos = np.concatenate([
-        np.sort(rng.randint(0, 3000, int(t))).astype(np.uint64)
-        for t in tfs])
-    ctx = rng.randint(0, 1 << 19, int(tfs.sum())).astype(np.uint64)
-
-    b3 = encode_postings(docs, tfs, dls, pos, ctx, rks)
-    b4 = encode_postings(docs, tfs, dls, pos, ctx, rks,
-                         docid_codec="pfor")
-    from open_source_search_engine_spark.functions.codec import (
-        FRONTIER_FLAG,
-    )
-
-    assert b4[0] == (4 | FRONTIER_FLAG) and b3[0] == (3 | FRONTIER_FLAG)
-    d3 = decode_blocks(b3, with_positions=True)
-    d4 = decode_blocks(b4, with_positions=True)
-    for k in ("doc_ids", "tfs", "doclens", "ranks", "positions",
-              "ctxs", "block_max_tf", "block_min_dl"):
-        assert np.array_equal(d3[k], d4[k]), k
-
-    m = BlockMeta(b4)
-    assert m.nblocks == 3
-    s3 = decode_blocks(b3, block_idx=[1], with_positions=True)
-    s4 = decode_blocks(b4, block_idx=[1], with_positions=True)
-    assert np.array_equal(s3["doc_ids"], s4["doc_ids"])
-    assert np.array_equal(s3["positions"], s4["positions"])
-
-    # mixed-version merge: a v4 mini-segment merges with v3 ones and
-    # the result (default v3) matches an all-v3 merge byte-for-byte
-    half = nd // 2
-    cut = int(tfs[:half].sum())
-    a3 = encode_postings(docs[:half], tfs[:half], dls[:half],
-                         pos[:cut], ctx[:cut], rks[:half])
-    a4 = encode_postings(docs[:half], tfs[:half], dls[:half],
-                         pos[:cut], ctx[:cut], rks[:half],
-                         docid_codec="pfor")
-    b_rest3 = encode_postings(docs[half:], tfs[half:], dls[half:],
-                              pos[cut:], ctx[cut:], rks[half:])
-    from open_source_search_engine_spark.functions.codec import (
-        merge_disjoint_blobs,
-    )
-    assert (merge_disjoint_blobs([a4, b_rest3])
-            == merge_disjoint_blobs([a3, b_rest3]))
-
-
-def test_pfor_all_codec_parity():
-    """v5 (docs + tf/dl/rank + positions all FOR-bitpacked) decodes
-    identically to v3 varint for full, selective, header-only, and
-    ctx-only paths; opt-in via encode_postings(docid_codec='pfor_all')."""
-    rng = np.random.default_rng(13)
-    doc_ids, tfs, doclens, pos, ctx, ranks = make_postings(rng, 700)
-
-    b3 = encode_postings(doc_ids, tfs, doclens, pos, ctx, ranks)
-    b5 = encode_postings(doc_ids, tfs, doclens, pos, ctx, ranks,
-                         docid_codec="pfor_all")
-    from open_source_search_engine_spark.functions.codec import (
-        FRONTIER_FLAG,
-    )
-
-    assert b5[0] == (5 | FRONTIER_FLAG) and b3[0] == (3 | FRONTIER_FLAG)
-    assert len(b5) < len(b3)  # the whole point
-    d3 = decode_blocks(b3, with_positions=True)
-    d5 = decode_blocks(b5, with_positions=True)
-    for k in ("doc_ids", "tfs", "doclens", "ranks", "positions",
-              "ctxs", "block_max_tf", "block_min_dl"):
-        assert np.array_equal(d3[k], d5[k]), k
-
-    h3 = decode_headers(b3)
-    h5 = decode_headers(b5)
-    for k in ("doc_ids", "tfs", "doclens", "ranks"):
-        assert np.array_equal(h3[k], h5[k]), k
-
-    m = BlockMeta(b5)
-    assert m.version == 5 and m.nblocks == 6
-    s3 = decode_blocks(b3, block_idx=[0, 3, 5], with_positions=True)
-    s5 = decode_blocks(b5, block_idx=[0, 3, 5], with_positions=True)
-    for k in ("doc_ids", "tfs", "doclens", "ranks", "positions", "ctxs"):
-        assert np.array_equal(s3[k], s5[k]), k
-
-    c3 = decode_blocks(b3, None, True, ctx_only=True)
-    c5 = decode_blocks(b5, None, True, ctx_only=True)
-    assert np.array_equal(c3["ctxs"], c5["ctxs"])
-    assert not c5["positions"].any()
-
-
-def test_pfor_all_mixed_version_merge():
-    """v3 + v4 + v5 mini-segments merge transparently, and the merged
-    blob re-encodes in whichever codec the conf asks for."""
-    from open_source_search_engine_spark.functions.codec import (
-        merge_disjoint_blobs,
-        merge_disjoint_blobs_many,
-    )
-
-    rng = np.random.default_rng(5)
-    thirds = [make_postings(rng, 90) for _ in range(3)]
-    # disjoint ascending docid ranges
-    offs = [0, 1 << 39, 1 << 40]
-    blobs, codecs = [], ("varint", "pfor", "pfor_all")
-    for (d, t, dl, p, c, r), off, codec in zip(thirds, offs, codecs):
-        blobs.append(encode_postings((d + off).astype(np.uint64),
-                                     t, dl, p, c, r, docid_codec=codec))
-    from open_source_search_engine_spark.functions.codec import (
-        FRONTIER_FLAG,
-    )
-
-    for out_codec, ver in (("varint", 3), ("pfor_all", 5)):
-        m1 = merge_disjoint_blobs(blobs, docid_codec=out_codec)
-        (m2,), _, _, _ = merge_disjoint_blobs_many(
-            [blobs], docid_codec=out_codec)
-        assert m1 == m2 and m1[0] == (ver | FRONTIER_FLAG)
-        d = decode_postings(m1)
-        assert len(d["doc_ids"]) == 270
-        assert np.array_equal(
-            d["positions"],
-            np.concatenate([th[3] for th in thirds]))
-
-
-def test_pfor_all_bulk_encode_byte_parity():
-    """encode_postings_many(docid_codec='pfor_all') is byte-identical
-    per run to the per-blob encoder, across run lengths spanning the
-    block boundary."""
-    from open_source_search_engine_spark.functions.codec import (
-        encode_postings_many,
-    )
-
-    rng = np.random.default_rng(29)
-    runs = [make_postings(rng, n) for n in (1, 2, 127, 128, 129, 513)]
-    run_nd = np.array([len(r[0]) for r in runs], dtype=np.int64)
-    blobs = encode_postings_many(
-        run_nd,
-        np.concatenate([r[0] for r in runs]),
-        np.concatenate([r[1] for r in runs]),
-        np.concatenate([r[2] for r in runs]),
-        np.concatenate([r[5] for r in runs]),
-        np.concatenate([r[3] for r in runs]),
-        np.concatenate([r[4] for r in runs]),
-        docid_codec="pfor_all")
-    for blob, (d, t, dl, p, c, r) in zip(blobs, runs):
-        assert blob == encode_postings(d, t, dl, p, c, r,
-                                       docid_codec="pfor_all")
 
 
 def test_merge_empty_blob_lists():

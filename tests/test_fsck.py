@@ -1,6 +1,7 @@
 """Index fsck (RdbMap verify analog): a healthy index — fresh,
-multi-gen, PFOR-coded, compacted — reports zero violations on every
-check; tampered stats rows are caught by the blob checks."""
+multi-gen, compacted — reports zero violations on every check;
+tampered stats rows and blobs of removed codec formats are caught by
+the blob checks."""
 
 from __future__ import annotations
 
@@ -81,6 +82,10 @@ def test_fsck_green_pfor(spark, tmp_index):
     ("n_bytes", 1, "n_bytes_matches"),
     ("bucket", 3, "bucket_matches"),
     ("postings", b"\x02garbage", "blob_decodes"),
+    # a valid blob relabelled as a removed format: v3, v5, flag-less v4
+    ("version_byte", 0x43, "blob_decodes"),
+    ("version_byte", 0x45, "blob_decodes"),
+    ("version_byte", 0x04, "blob_decodes"),
 ])
 def test_fsck_catches_tampering(field, value, check):
     from open_source_search_engine_spark.functions.codec import (
@@ -97,7 +102,10 @@ def test_fsck_catches_tampering(field, value, check):
         ctxs=np.array([0, 0, 0, 0], dtype=np.uint64))
     row = {"term_id": 8, "salt": 0, "df": 3, "cf": 4, "max_tf": 2,
            "n_bytes": len(blob), "bucket": 0, "postings": blob}
-    row[field] = value
+    if field == "version_byte":
+        row["postings"] = bytes([value]) + blob[1:]
+    else:
+        row[field] = value
     out = list(_blob_check_udf(n_buckets=4, n_salts=2)(
         iter([pd.DataFrame([row])])))[0]
     bad = dict(zip(out["check"], out["n_bad"]))
@@ -131,14 +139,6 @@ def test_fsck_catches_salt_violation():
         iter([pd.DataFrame([row])])))[0]
     bad = dict(zip(out["check"], out["n_bad"]))
     assert bad["salt_residue"] == 1
-
-
-def test_fsck_green_pfor_all(spark, tmp_index):
-    conf = EngineConf(n_buckets=4, n_salts=2, salt_df_threshold=10_000,
-                      docid_codec="pfor_all")
-    build_index(spark, _df(spark, range(1, 21)), tmp_index,
-                conf=conf, gen=0)
-    _assert_clean(fsck_index(spark, tmp_index, conf).collect())
 
 
 def test_fsck_reads_layout_from_index_meta(spark, small_conf, tmp_index):

@@ -130,7 +130,7 @@ def test_cache_key_fingerprints_all_score_conf(tmp_path):
         conf = dataclasses.replace(base, **{fld: val})
         assert qc._key(idx, "spark", 10, conf) != k0, fld
 
-    for fld, val in dict(docid_codec="pfor_all", n_buckets=8,
+    for fld, val in dict(n_buckets=8,
                          planner_sketch_gate=False,
                          ref_two_pass_min_postings=5).items():
         conf = dataclasses.replace(base, **{fld: val})

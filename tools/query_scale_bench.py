@@ -41,10 +41,10 @@ def main() -> int:
                       shuffle_partitions=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    from open_source_search_engine_spark.config import DEFAULT_CONF
+    from open_source_search_engine_spark.functions.codec import CODEC_VERSION
 
     idx = (f"/tmp/osse_qscale_{n_docs}_v{INDEX_FORMAT_VERSION}"
-           f"_{DEFAULT_CONF.docid_codec}")
+           f"_c{CODEC_VERSION}")
     if not os.path.exists(os.path.join(idx, "_index_meta.json")):
         t0 = time.time()
         build_index(spark, synthesize(spark, n_docs), idx, resume=True)

@@ -30,17 +30,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def run_one(cpus: int, input_dir: str, out_path: str) -> None:
-    import dataclasses
     import time
 
-    from open_source_search_engine_spark.config import DEFAULT_CONF
     from open_source_search_engine_spark.index.build import build_index
     from open_source_search_engine_spark.session import get_spark
-
-    conf = DEFAULT_CONF
-    codec = os.environ.get("SPARK_GRAFT_CODEC")
-    if codec:
-        conf = dataclasses.replace(conf, docid_codec=codec)
 
     spark = get_spark(app=f"osse-scale-{cpus}", master=f"local[{cpus}]",
                       shuffle_partitions=cpus)
@@ -51,7 +44,7 @@ def run_one(cpus: int, input_dir: str, out_path: str) -> None:
 
     idx = tempfile.mkdtemp(prefix=f"osse_scale_idx_{cpus}_")
     t0 = time.time()
-    meta = build_index(spark, wt, idx, resume=False, conf=conf)
+    meta = build_index(spark, wt, idx, resume=False)
     secs = time.time() - t0
     n_docs = meta["n_docs"]
 
